@@ -32,7 +32,15 @@ import java.nio.charset.StandardCharsets
   *                                      server-side pinning); zero
   *                                      configuration, the layout comes
   *                                      from the store's self-describing
-  *                                      manifest
+  *                                      manifest. 200 bodies are cached
+  *                                      per (canonical store dir,
+  *                                      manifest generation — mtime
+  *                                      and digest — version, clamped
+  *                                      limit), 16 entries: a repeat
+  *                                      read of an unchanged store runs
+  *                                      no Spark job, and any commit,
+  *                                      compaction, vacuum or re-creation
+  *                                      rewrites the manifest and misses
   *   POST /probe/perplexity?store=<name>[&limit=N]
   *                                   → score a posted {doc_id, text}
   *                                      batch against a persisted
@@ -233,6 +241,16 @@ import java.nio.charset.StandardCharsets
   *                                      every persisted store now has
   *                                      a served write. Ledger-
   *                                      idempotent like its siblings.
+  *                                      The body (one JSON row, or an
+  *                                      array of rows, per line) is
+  *                                      checked and parsed in the server
+  *                                      — field names by Jackson, values
+  *                                      FAILFAST by Spark's own JSON
+  *                                      parser folded at planning — so
+  *                                      the only Spark jobs are
+  *                                      appendTagged's write; unknown
+  *                                      fields, failed coercion, no rows
+  *                                      or a null key are 400s.
   *   POST /ingest/report?store=<name>&tag=<night>&type=funnel|
   *        funnel_deepest|funnel_sessions|retention|retention_rolling|
   *        paths|latency [&window=1d][&period=week][&gap=30m][&wait=30s]
@@ -333,7 +351,20 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
                         storeRoot: Option[String] = None,
                         indexRoot: Option[String] = None) {
 
+  QueryServer.preferNoDelay()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+
+  /** Name prefix of this server's request threads, unique per instance
+    * so a stopped server can be seen to leave none behind. */
+  private[graft] val threadPrefix =
+    s"graft-server-${QueryServer.instances.incrementAndGet()}-"
+
+  /** The request threads; [[stop]] shuts them down. */
+  private val pool = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, threadPrefix + n.incrementAndGet()))
+  }
 
   /** Max rows a single request may collect onto the driver. */
   val MaxLimit = 10000
@@ -400,6 +431,24 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
   }
 
   def boundPort: Int = server.getAddress.getPort
+
+  /** `GET /store` response bodies, keyed on (canonical store dir,
+    * manifest generation, `version` param, clamped limit). Members are
+    * immutable while a manifest names them, so one generation's answer
+    * never changes: a commit, compaction or vacuum rewrites the manifest
+    * and misses, as does a store deleted and recreated under the same
+    * name. Only 200 bodies are kept; refusals are recomputed. Bounded
+    * by entry count, least recently used out first. */
+  private val storeReads = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, String, Option[Long], Int), String](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, String, Option[Long], Int), String]): Boolean =
+        size > QueryServer.StoreReadEntries
+    })
+
+  private def manifestGeneration(dir: java.io.File): Option[String] =
+    graft.sources.StoreFs.anonymous(dir.getPath).generation("_MANIFEST")
 
   private def respond(ex: HttpExchange, code: Int, body: String,
                       ctype: String = "application/json"): Unit = {
@@ -469,6 +518,58 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       .collectFirst { case kv if kv.startsWith(key + "=") =>
         java.net.URLDecoder.decode(kv.drop(key.length + 1), "UTF-8") }
 
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Top-level field names of one `/ingest/point` body line, as Spark's
+    * JSON reader infers them: an object's own names, or the names of an
+    * array's object elements (nulls skipped). A malformed line, a scalar,
+    * or an array holding anything else names nothing — the typed parse
+    * refuses it. */
+  private def fieldNamesOf(line: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    def names(n: com.fasterxml.jackson.databind.JsonNode) =
+      n.fieldNames.asScala.toSeq
+    scala.util.Try(jsonMapper.readTree(line)).toOption match {
+      case Some(n) if n.isObject => names(n)
+      case Some(n) if n.isArray =>
+        val elems = n.elements.asScala.filterNot(_.isNull).toSeq
+        if (elems.forall(_.isObject)) elems.flatMap(names) else Nil
+      case _ => Nil
+    }
+  }
+
+  /** FAILFAST typed parse of `/ingest/point` body lines in the server JVM,
+    * by Spark's own JSON parser: `from_json` over a local relation, which
+    * the optimizer evaluates while planning, so no Spark job runs. A line
+    * holding an array is a batch of rows, one per element, as with
+    * `spark.read.json`. None when any line or element fails to parse or
+    * to coerce to the store's types. */
+  private def parseRows(lines: Seq[String],
+                        schema: org.apache.spark.sql.types.StructType)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, from_json}
+    import org.apache.spark.sql.types.{ArrayType, DataType}
+    import spark.implicits._
+    def parse(ls: Seq[String], dt: DataType) =
+      if (ls.isEmpty) Seq.empty[Any]
+      else ls.toDF("line")
+        .select(from_json(col("line"), dt, Map("mode" -> "FAILFAST")))
+        .collect().toSeq.map(_.get(0))
+    val (arrays, objects) = lines.partition(_.trim.startsWith("["))
+    try {
+      val rows = parse(objects, schema) ++ parse(arrays, ArrayType(schema))
+        .flatMap(_.asInstanceOf[scala.collection.Seq[Any]])
+      // a null array element is a malformed row to the reader too
+      if (rows.contains(null)) None else Some(rows.map(_.asInstanceOf[Row]))
+    } catch {
+      case _: org.apache.spark.SparkException => None
+      case e: org.apache.spark.SparkThrowable
+          if Option(e.getCondition).exists(_.startsWith("MALFORMED_RECORD")) =>
+        None
+    }
+  }
+
   /** `&wait=` on a served write: a bounded poll on the target's writer
     * lease — the double-firing-scheduler convenience /ingest/report
     * introduced, uniform across every write face: the second firing of
@@ -535,8 +636,13 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
           else if (lim.contains(None))
             respond(ex, 400, """{"error":"limit must be an integer"}""")
           else try {
+            val limit = lim.flatten.getOrElse(1000).max(1).min(MaxLimit)
+            val generation = manifestGeneration(dir)
+            val key = (dir.getPath, generation.getOrElse(""), ver.flatten, limit)
+            val cached = storeReads.get(key)
             val store =
-              try graft.sources.PointStore.open(spark, dir.getPath)
+              if (cached != null) null
+              else try graft.sources.PointStore.open(spark, dir.getPath)
               catch { case e: IllegalArgumentException =>
                 val msg = Option(e.getMessage).getOrElse("bad store")
                 respond(ex,
@@ -545,9 +651,9 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
                     .replace("\\", "\\\\").replace("\"", "\\\"")}"}""")
                 null
               }
-            if (store != null) {
+            if (cached != null) respond(ex, 200, cached)
+            else if (store != null) {
               import org.apache.spark.sql.functions.col
-              val limit = lim.flatten.getOrElse(1000).max(1).min(MaxLimit)
               val frame = ver.flatten match {
                 case Some(v) => store.snapshotAt(v)
                 case None => store.snapshot
@@ -555,7 +661,12 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
               val keyCols = store.storedSchema.get("keys").map(col)
               val rows = frame.orderBy(keyCols: _*).limit(limit)
                 .toJSON.collect()
-              respond(ex, 200, rows.mkString("[", ",", "]"))
+              val body = rows.mkString("[", ",", "]")
+              // cache only what one generation answered: a commit that
+              // landed while the rows were read leaves the key unfilled
+              if (generation.isDefined && manifestGeneration(dir) == generation)
+                storeReads.put(key, body)
+              respond(ex, 200, body)
             }
           } catch {
             case e: IllegalArgumentException =>
@@ -2503,60 +2614,44 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
             respond(ex, 400,
               """{"error":"tag must be filesystem-safe ([A-Za-z0-9._-]+)"}""")
           else try {
-            import org.apache.spark.sql.functions.col
             val store = graft.sources.PointStore.open(spark, dir.getPath)
             val keyCols = store.keys
-            val body = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            import spark.implicits._
-            val lines = body.linesIterator.toSeq.filter(_.trim.nonEmpty).toDS()
+            val schema = store.snapshotSchema
+            val lines = new String(ex.getRequestBody.readAllBytes(),
+              StandardCharsets.UTF_8).linesIterator.filter(_.trim.nonEmpty).toSeq
             // a write face must be strict, not PERMISSIVE: a mistyped
             // measure value or a misspelled measure field would parse
-            // to null and fold SILENTLY (sums skip nulls) — so first a
-            // schema-free pass rejects field names the store doesn't
-            // carry (misspellings; `_corrupt_record` here means a
-            // malformed line), then the typed parse runs FAILFAST so a
-            // value that fails coercion is a 400, never a silent null.
-            val known = store.snapshot.schema.fieldNames.toSet
-            val inferred = spark.read.json(lines).schema.fieldNames.toSet
-            val unknown = (inferred - "_corrupt_record").diff(known)
+            // to null and fold SILENTLY (sums skip nulls) — so first the
+            // field names are checked against the store's, then the
+            // typed parse runs FAILFAST so a value that fails coercion
+            // is a 400, never a silent null.
+            val known = schema.fieldNames.toSet
+            val unknown = lines.flatMap(fieldNamesOf).toSet.diff(known)
             if (unknown.nonEmpty)
               respond(ex, 400,
                 s"""{"error":"unknown field(s) ${unknown.toSeq.sorted
                   .mkString(", ")} — store carries ${known.toSeq.sorted
                   .mkString(", ")}"}""")
-            else {
-              val rows = spark.read.schema(store.snapshot.schema)
-                .option("mode", "FAILFAST")
-                .json(lines)
-                .cache()
-              try {
-                val parsed = try Right(rows.count()) catch {
-                  case e: org.apache.spark.SparkException => Left(e)
+            else parseRows(lines, schema) match {
+              case None =>
+                respond(ex, 400,
+                  """{"error":"row(s) failed schema coercion — """ +
+                    """measure values must match the store's types"}""")
+              case Some(rows) =>
+                val keyIdx = keyCols.map(schema.fieldIndex)
+                if (rows.isEmpty || rows.exists(r => keyIdx.exists(r.isNullAt)))
+                  respond(ex, 400,
+                    s"""{"error":"body must be JSON rows with non-null """ +
+                      s"""key(s) ${keyCols.mkString(", ")}"}""")
+                else leaseWaitOf(ex) match {
+                  case Left(b) => respond(ex, 400, b)
+                  case Right(w) =>
+                    import scala.jdk.CollectionConverters._
+                    val committed = store.appendTagged(tag,
+                      spark.createDataFrame(rows.asJava, schema), leaseWaitMs = w)
+                    respond(ex, 200, s"""{"store":"$name","tag":"$tag",""" +
+                      s""""committed":$committed,"version":${store.version}}""")
                 }
-                parsed match {
-                  case Left(_) =>
-                    respond(ex, 400,
-                      """{"error":"row(s) failed schema coercion — """ +
-                        """measure values must match the store's types"}""")
-                  case Right(n) =>
-                    val badKey = keyCols.map(k => col(k).isNull)
-                      .reduceOption(_ || _).map(rows.filter(_).count())
-                      .getOrElse(0L)
-                    if (n == 0 || badKey > 0)
-                      respond(ex, 400,
-                        s"""{"error":"body must be JSON rows with non-null """ +
-                          s"""key(s) ${keyCols.mkString(", ")}"}""")
-                    else leaseWaitOf(ex) match {
-                      case Left(b) => respond(ex, 400, b)
-                      case Right(w) =>
-                        val committed = store.appendTagged(tag, rows,
-                          leaseWaitMs = w)
-                        respond(ex, 200, s"""{"store":"$name","tag":"$tag",""" +
-                          s""""committed":$committed,"version":${store.version}}""")
-                    }
-                }
-              } finally rows.unpersist(false)
             }
           } catch {
             case e: IllegalArgumentException =>
@@ -3254,14 +3349,37 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
           }
       }
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    server.setExecutor(pool)
     server.start()
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop listening, then let in-flight requests finish (bounded) and end
+    * the request threads, so a stopped server keeps no JVM alive. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
+      pool.shutdownNow()
+  }
 }
 
 object QueryServer {
+
+  private val instances = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Entry cap of the `GET /store` response cache: a page holds at most
+    * `MaxLimit` rows, so the cache stays within tens of MB. */
+  private val StoreReadEntries = 16
+
+  /** TCP_NODELAY on the JDK server's sockets: it writes a response's
+    * headers and body separately, and without NODELAY the body waits out
+    * the client's delayed ACK (~40 ms per small response). The JDK reads
+    * the property once, when the first `HttpServer` is created; a value
+    * the user set is kept. */
+  private def preferNoDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+
   def main(args: Array[String]): Unit = {
     val port = sys.env.getOrElse("GRAFT_PORT", "8080").toInt
     val sf = sys.env.getOrElse("GRAFT_SF_DIR", "/root/testdata/sf0.01")

@@ -260,16 +260,20 @@ final class PointStore(spark: SparkSession, path: String,
         .toSeq.sorted.map(TagLine + _)) :+ s"$VacLine$v")
     }
 
-  /** Member parquet write + schema-memo invalidation (r21 ADVICE): a
-    * rebuilt stream's batch ids restart at 0 after [[overwriteTagged]]
-    * dropped the `bN` tag ledger, so a `delta-bN` PATH can be rewritten
-    * within one JVM — every same-path write must drop the memoized
-    * footer schema or a later snapshot union could silently omit a
-    * measure column only the new member carries. */
+  /** Member parquet write + schema-memo seeding. The memo entry is the
+    * written frame's schema as a parquet read reports it, so the next
+    * [[snapshot]] after a commit reads no footer (a Spark job per fresh
+    * member otherwise). The put also REPLACES any older entry (r21
+    * ADVICE): a rebuilt stream's batch ids restart at 0 after
+    * [[overwriteTagged]] dropped the `bN` tag ledger, so a `delta-bN`
+    * PATH can be rewritten within one JVM, and a stale schema could
+    * make a later snapshot union silently omit a measure column only
+    * the new member carries. */
   private def writeMemberParquet(name: String, df: DataFrame): Unit = {
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(sfs.pathOf(name))
-    PointStore.memberSchemaMemo.remove(sfs.pathOf(name))
+    PointStore.memberSchemaMemo.put(sfs.pathOf(name),
+      PointStore.readSchemaOf(df.schema))
   }
 
   private def writeManifest(ms: Seq[String]): Unit =
@@ -383,6 +387,7 @@ final class PointStore(spark: SparkSession, path: String,
         writeManifest(manifestLines :+ s"$TagLine$tag" :+
           s"$LogLine${version + 1}:${PointStore.EmptyMember}")
         sfs.deleteChild(name)
+        PointStore.memberSchemaMemo.remove(sfs.pathOf(name))
       } else
         writeManifest(manifestLines :+ name :+ s"$LogLine${version + 1}:$name")
     }
@@ -423,6 +428,17 @@ final class PointStore(spark: SparkSession, path: String,
     mergeAgg(readMembers(ms))
   }
 
+  /** The schema of [[snapshot]], from the member schemas alone: no file
+    * listing, no scan planned — what a writer validating rows against
+    * the store needs. */
+  def snapshotSchema: org.apache.spark.sql.types.StructType = {
+    val ms = members
+    require(ms.nonEmpty, s"point store at $path is empty")
+    mergeAgg(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      memberUnion(ms))).schema
+  }
+
   /** One multi-path scan over member directories (r20 optimization,
     * guide §6): the per-member `reduce(unionByName)` chain paid one
     * schema-discovery read plus one plan leg PER member — a dozen
@@ -435,49 +451,51 @@ final class PointStore(spark: SparkSession, path: String,
     * a committed member is immutable (manifest flips always commit
     * FRESH names; the one same-name rewrite — a crashed appendTagged
     * attempt — happens before the commit, and only committed members
-    * are ever read), so the footer is read once per (JVM, member), not
-    * once per snapshot. `mergeSchema` would do the same union but as a
-    * distributed footer-sweep job on EVERY read (measured: +4 s on the
-    * curate lifecycle). */
+    * are ever read), so the footer is read at most once per (JVM,
+    * member), and never for a member this JVM wrote (seeded at write).
+    * `mergeSchema` would do the same union but as a distributed
+    * footer-sweep job on EVERY read (measured: +4 s on the curate
+    * lifecycle). */
   private def readMembers(ms: Seq[String]): DataFrame =
     if (spark.conf.getOption("spark.graft.store.memberRead")
         .contains("legacy"))
       ms.map(m => spark.read.parquet(sfs.pathOf(m)))
         .reduce(_.unionByName(_, allowMissingColumns = true))
-    else {
-      val perMember = ms.map { m =>
-        val p = sfs.pathOf(m)
-        m -> PointStore.memberSchemaMemo.computeIfAbsent(p,
-          q => spark.read.parquet(q).schema)
-      }
-      val union = perMember.foldLeft(
-        (Map.empty[String, org.apache.spark.sql.types.StructField],
-          Vector.empty[org.apache.spark.sql.types.StructField])) {
-        case ((byName, ordered), (m, schema)) =>
-          schema.fields.foldLeft((byName, ordered)) {
-            case ((bn, ord), f) =>
-              bn.get(f.name) match {
-                case Some(g) =>
-                  // additive-only evolution, ENFORCED (r21 ADVICE): the
-                  // legacy unionByName inserted coercing casts on a
-                  // type-widened column; the first-member-wins union
-                  // would instead mis-read it under the vectorized
-                  // reader — refuse loudly, naming member and column
-                  // .sql ignores nullability (sameType is private[sql])
-                  require(g.dataType.sql == f.dataType.sql,
-                    s"member '$m' of point store at $path declares " +
-                      s"column '${f.name}' as ${f.dataType.sql} but an " +
-                      s"earlier member holds ${g.dataType.sql} — measure " +
-                      "types cannot change across members (compact first)")
-                  (bn, ord)
-                case None => (bn + (f.name -> f), ord :+ f)
-              }
-          }
-      }._2
-      spark.read
-        .schema(org.apache.spark.sql.types.StructType(union))
-        .parquet(ms.map(sfs.pathOf): _*)
+    else spark.read.schema(memberUnion(ms)).parquet(ms.map(sfs.pathOf): _*)
+
+  /** The by-name union of the members' (memoized) schemas — the schema
+    * [[readMembers]] scans with. */
+  private def memberUnion(ms: Seq[String]): org.apache.spark.sql.types.StructType = {
+    val perMember = ms.map { m =>
+      val p = sfs.pathOf(m)
+      m -> PointStore.memberSchemaMemo.computeIfAbsent(p,
+        q => spark.read.parquet(q).schema)
     }
+    org.apache.spark.sql.types.StructType(perMember.foldLeft(
+      (Map.empty[String, org.apache.spark.sql.types.StructField],
+        Vector.empty[org.apache.spark.sql.types.StructField])) {
+      case ((byName, ordered), (m, schema)) =>
+        schema.fields.foldLeft((byName, ordered)) {
+          case ((bn, ord), f) =>
+            bn.get(f.name) match {
+              case Some(g) =>
+                // additive-only evolution, ENFORCED (r21 ADVICE): the
+                // legacy unionByName inserted coercing casts on a
+                // type-widened column; the first-member-wins union
+                // would instead mis-read it under the vectorized
+                // reader — refuse loudly, naming member and column
+                // .sql ignores nullability (sameType is private[sql])
+                require(g.dataType.sql == f.dataType.sql,
+                  s"member '$m' of point store at $path declares " +
+                    s"column '${f.name}' as ${f.dataType.sql} but an " +
+                    s"earlier member holds ${g.dataType.sql} — measure " +
+                    "types cannot change across members (compact first)")
+                (bn, ord)
+              case None => (bn + (f.name -> f), ord :+ f)
+            }
+        }
+    }._2)
+  }
 
   /** TIME TRAVEL: the store's content as of `version` — the merge-fold
     * of EVERY change window up to it, which equals the snapshot a
@@ -545,7 +563,8 @@ final class PointStore(spark: SparkSession, path: String,
             .drop("__z")
         }
       out.write.parquet(sfs.pathOf(name))
-      PointStore.memberSchemaMemo.remove(sfs.pathOf(name))
+      PointStore.memberSchemaMemo.put(sfs.pathOf(name),
+        PointStore.readSchemaOf(out.schema))
       // content is unchanged, so the version does not bump; the change
       // log and vacuum horizon carry over verbatim
       writeManifest((name +: consumedTags.toSeq.sorted.map(TagLine + _)) ++
@@ -632,10 +651,29 @@ object PointStore {
   private[sources] val EmptyMember = "-"
 
   /** Per-(JVM, member dir) parquet schema memo — METADATA only (a
-    * StructType, never rows); see [[PointStore!.readMembers]]. */
-  private[sources] val memberSchemaMemo =
+    * StructType, never rows); see [[PointStore!.readMembers]]. Every
+    * member this JVM writes is seeded here at write time. */
+  private[graft] val memberSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.apache.spark.sql.types.StructType]()
+
+  /** The schema `spark.read.parquet` reports for a member written from a
+    * frame of schema `s`: the same fields, every level nullable (file
+    * sources read everything as nullable). Seeds the memo at write time,
+    * so a fresh member's footer is never read back just for its schema. */
+  private[sources] def readSchemaOf(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def nullable(dt: DataType): DataType = dt match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    nullable(s).asInstanceOf[StructType]
+  }
 
   private[sources] val SchemaLine = "#schema:"
 

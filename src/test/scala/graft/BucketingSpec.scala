@@ -13,9 +13,12 @@ class BucketingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")
     // the in-memory catalog resets per JVM but the warehouse dir persists;
-    // remove stale physical locations from prior runs
+    // remove stale physical locations from prior runs (the warehouse is
+    // per test group, so read it from the session)
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
     for (t <- Seq("li_bucketed", "ord_bucketed")) {
-      val dir = java.nio.file.Paths.get(s"/tmp/graft_warehouse/$t")
+      val dir = java.nio.file.Paths.get(warehouse, t)
       if (java.nio.file.Files.exists(dir)) {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse

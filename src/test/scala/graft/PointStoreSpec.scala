@@ -526,6 +526,38 @@ class PointStoreSpec extends SparkSpec {
     assert(!reopened.appendTagged("b1", batch(1)))
   }
 
+  test("a written member's memoized schema is the one its footer reads " +
+      "back, for every measure class") {
+    import graft.functions.SketchOps
+    import graft.sources.StoreFs
+    import spark.implicits._
+    val rows = (0 until 200).map(i =>
+      (if (i % 2 == 0) "en" else "de", i.toLong, BigDecimal(i) / 4))
+    def partial(m: Int) = rows.filter(_._2 % 2 == m).toDF("lang", "v", "q")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"), sum(col("q").cast("decimal(18,2)")).as("qs"),
+        max(col("v")).as("mx"), min(col("v")).as("mn"),
+        SketchOps.distinctSketch(col("v"), 12, 4096).as("dsk"),
+        SketchOps.quantileSketch(col("v"), 1024).as("qsk"),
+        SketchOps.topkSketch(pmod(col("v"), lit(5L)).cast("string"), 16).as("tk"))
+    val dir = freshDir("memo")
+    val store = new PointStore(spark, dir, keys = Seq("lang"),
+      sums = Seq("n", "qs"), maxes = Seq("mx"), sketches = Seq("dsk"),
+      quantiles = Seq("qsk"), mins = Seq("mn"), topks = Seq("tk"))
+    store.appendTagged("t0", partial(0))
+    store.appendTagged("t1", partial(1))
+    store.compact()
+    store.appendTagged("t2", partial(0).withColumn("n", col("n") + 1))
+    val sfs = StoreFs(spark, dir)
+    assert(store.members.size == 2)
+    store.members.map(sfs.pathOf).foreach { p =>
+      val memo = PointStore.memberSchemaMemo.get(p)
+      assert(memo != null, s"$p was not memoized at write")
+      assert(memo == spark.read.parquet(p).schema, p)
+    }
+    assert(store.snapshotSchema == store.snapshot.schema)
+  }
+
   test("ledger-only empty delta: version bumps, tag consumed, no member, " +
     "changefeed windows and snapshot unchanged (r20)") {
     val dir = freshDir("emptydelta")

@@ -344,6 +344,163 @@ class ServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("POST /ingest/point pins the write face: array lines, malformed " +
+      "lines, case-variant names, integral decimals and null keys") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_wface").toString
+    val store = new graft.sources.PointStore(spark, s"$root/wf",
+      keys = Seq("k"), sums = Seq("played", "time_spent_d"), maxes = Nil)
+    // decimal(38,2) is the width a summed decimal settles at (the
+    // benchmark's player store holds the same)
+    store.appendTagged("b0", Seq(("a", 1L, BigDecimal("1.50")))
+      .toDF("k", "played", "time_spent_d")
+      .withColumn("time_spent_d", col("time_spent_d").cast("decimal(38,2)")))
+    def rows = store.snapshot.collect().map(r =>
+      r.getString(0) -> ((r.getLong(1), r.getDecimal(2).toPlainString))).toMap
+    val srv = new QueryServer(spark, sf, storeRoot = Some(root))
+    srv.start()
+    try {
+      val port = srv.boundPort
+      def ingest(tag: String, body: String) =
+        post(port, s"/ingest/point?store=wf&tag=$tag", body)
+      // a line holding a JSON array is a batch of rows, one per element
+      val (ac, ab) = ingest("arr",
+        """[{"k":"a","played":2,"time_spent_d":0.25},{"k":"b","played":3,"time_spent_d":4.10}]""")
+      assert(ac == 200 && ab.contains("\"committed\":true"), ab)
+      // a decimal measure sent as an integer coerces exactly
+      val (ic, ib) = ingest("int", """{"k":"c","played":1,"time_spent_d":7}""")
+      assert(ic == 200 && ib.contains("\"committed\":true"), ib)
+      val folded = Map("a" -> ((3L, "1.75")), "b" -> ((3L, "4.10")),
+        "c" -> ((1L, "7.00")))
+      assert(rows == folded)
+      // one malformed line among good ones refuses the whole body
+      val (mc, mb) = ingest("mal",
+        "{\"k\":\"d\",\"played\":1}\n{\"k\": oops\n{\"k\":\"e\",\"played\":1}")
+      assert(mc == 400 && mb.contains("schema coercion"), s"$mc $mb")
+      // field names are case-sensitive: `Played` is not `played`
+      val (pc, pb) = ingest("case", """{"k":"a","Played":5}""")
+      assert(pc == 400 && pb.contains("unknown field(s) Played"), s"$pc $pb")
+      // a null key has no grain to fold into
+      val (nc, nb) = ingest("nul", """{"k":null,"played":1}""")
+      assert(nc == 400 && nb.contains("non-null key(s) k"), s"$nc $nb")
+      // none of the refused bodies committed or consumed its tag
+      assert(rows == folded)
+      assert(store.consumedTags == Set("b0", "arr", "int"))
+    } finally srv.stop()
+  }
+
+  test("POST /ingest/point starts no Spark job beyond appendTagged's own") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_wjobs").toString
+    val store = new graft.sources.PointStore(spark, s"$root/wj",
+      keys = Seq("k"), sums = Seq("n"), maxes = Seq("m"))
+    store.appendTagged("b0", Seq(("a", 1L, 1L)).toDF("k", "n", "m"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // listener events post asynchronously: count once the bus is quiet
+    def settled(): Int = {
+      var last = -1
+      while (jobs.get != last) { last = jobs.get; Thread.sleep(300) }
+      last
+    }
+    def jobsOf(f: => Unit): Int = { val j0 = settled(); f; settled() - j0 }
+    val rows = Seq(("a", 2L, 5L), ("b", 3L, 7L))
+    val srv = new QueryServer(spark, sf, storeRoot = Some(root))
+    srv.start()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val inProcess = jobsOf(assert(
+        store.appendTagged("p1", rows.toDF("k", "n", "m"))))
+      val served = jobsOf {
+        val (c, b) = post(srv.boundPort, "/ingest/point?store=wj&tag=p2",
+          rows.map { case (k, n, m) => s"""{"k":"$k","n":$n,"m":$m}""" }
+            .mkString("\n"))
+        assert(c == 200 && b.contains("\"committed\":true"), b)
+      }
+      assert(inProcess > 0 && served == inProcess,
+        s"served write ran $served jobs, in-process appendTagged $inProcess")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      srv.stop()
+    }
+  }
+
+  test("GET /store answers from its cache only while the manifest is " +
+      "unchanged: writes, compaction, vacuum and recreation all show") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_scache").toString
+    def create(v: Long) = {
+      val st = new graft.sources.PointStore(spark, s"$root/sc",
+        keys = Seq("k"), sums = Seq("v"), maxes = Nil)
+      st.appendTagged("n1", Seq(("a", v), ("b", v)).toDF("k", "v"))
+      st
+    }
+    val store = create(1L)
+    val srv = new QueryServer(spark, sf, storeRoot = Some(root))
+    srv.start()
+    try {
+      val port = srv.boundPort
+      val first = get(port, "/store/sc")
+      assert(first == get(port, "/store/sc")) // a repeat read: same body
+      assert(first._2.contains(""""k":"a","v":1"""), first._2)
+      // a write made just before the read shows in it, in-process ...
+      store.appendTagged("n2", Seq(("a", 2L)).toDF("k", "v"))
+      val afterLib = get(port, "/store/sc")._2
+      assert(afterLib.contains(""""k":"a","v":3"""), afterLib)
+      // ... and over the wire; /version then reports at least the
+      // version the POST did
+      val (pc, pb) = post(port, "/ingest/point?store=sc&tag=n3",
+        """{"k":"b","v":10}""")
+      assert(pc == 200, pb)
+      val posted = """"version":(\d+)""".r.findFirstMatchIn(pb).get.group(1).toLong
+      val polled = """"version":(\d+)""".r
+        .findFirstMatchIn(get(port, "/version?store=sc")._2).get.group(1).toLong
+      assert(polled >= posted && posted == 3L)
+      val current = get(port, "/store/sc")._2
+      assert(current.contains(""""k":"b","v":11"""), current)
+      val v1 = get(port, "/store/sc?version=1")
+      assert(v1 == (200, first._2))
+      // compaction rewrites the manifest, never the rows
+      assert(post(port, "/compact?store=sc", "")._1 == 200)
+      assert(get(port, "/store/sc")._2 == current)
+      assert(get(port, "/store/sc?version=1") == v1)
+      // vacuum ends time travel: the cached version-1 page is not served
+      assert(post(port, "/vacuum?store=sc", "")._1 == 200)
+      val (oc, ob) = get(port, "/store/sc?version=1")
+      assert(oc == 400 && ob.contains("vacuumed"), ob)
+      assert(get(port, "/store/sc")._2 == current)
+      // the same name deleted and recreated under the running server:
+      // the recreated store's rows, not the cached ones
+      graft.sources.PointStore.deleteRec(new java.io.File(root, "sc"))
+      create(5L)
+      val recreated = get(port, "/store/sc")._2
+      assert(recreated.contains(""""k":"a","v":5""") &&
+        !recreated.contains(""""v":11"""), recreated)
+      assert(get(port, "/store/sc?version=1")._2 == recreated)
+    } finally srv.stop()
+  }
+
+  test("stop() ends the server's request threads") {
+    val srv = new QueryServer(spark, sf)
+    srv.start()
+    def poolThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName.startsWith(srv.threadPrefix) && t.isAlive)
+    (1 to 6).foreach(_ => assert(get(srv.boundPort, "/health")._1 == 200))
+    val started = poolThreads
+    assert(started.nonEmpty)
+    srv.stop()
+    // a terminated pool's workers have left their run loop; allow each
+    // thread a moment to finish exiting
+    started.foreach(_.join(5000))
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName).mkString(", "))
+  }
+
   test("POST /probe/perplexity scores a batch against a persisted bigram " +
       "count store over a real socket ≡ the library probe") {
     import org.apache.spark.sql.functions.col
