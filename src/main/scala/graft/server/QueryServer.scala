@@ -32,15 +32,7 @@ import java.nio.charset.StandardCharsets
   *                                      server-side pinning); zero
   *                                      configuration, the layout comes
   *                                      from the store's self-describing
-  *                                      manifest. 200 bodies are cached
-  *                                      per (canonical store dir,
-  *                                      manifest generation — mtime
-  *                                      and digest — version, clamped
-  *                                      limit), 16 entries: a repeat
-  *                                      read of an unchanged store runs
-  *                                      no Spark job, and any commit,
-  *                                      compaction, vacuum or re-creation
-  *                                      rewrites the manifest and misses
+  *                                      manifest
   *   POST /probe/perplexity?store=<name>[&limit=N]
   *                                   → score a posted {doc_id, text}
   *                                      batch against a persisted
@@ -354,17 +346,8 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
   QueryServer.preferNoDelay()
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
-  /** Name prefix of this server's request threads, unique per instance
-    * so a stopped server can be seen to leave none behind. */
-  private[graft] val threadPrefix =
-    s"graft-server-${QueryServer.instances.incrementAndGet()}-"
-
   /** The request threads; [[stop]] shuts them down. */
-  private val pool = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
-      new Thread(r, threadPrefix + n.incrementAndGet()))
-  }
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
 
   /** Max rows a single request may collect onto the driver. */
   val MaxLimit = 10000
@@ -431,24 +414,6 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
   }
 
   def boundPort: Int = server.getAddress.getPort
-
-  /** `GET /store` response bodies, keyed on (canonical store dir,
-    * manifest generation, `version` param, clamped limit). Members are
-    * immutable while a manifest names them, so one generation's answer
-    * never changes: a commit, compaction or vacuum rewrites the manifest
-    * and misses, as does a store deleted and recreated under the same
-    * name. Only 200 bodies are kept; refusals are recomputed. Bounded
-    * by entry count, least recently used out first. */
-  private val storeReads = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, Option[Long], Int), String](
-        16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          (String, String, Option[Long], Int), String]): Boolean =
-        size > QueryServer.StoreReadEntries
-    })
-
-  private def manifestGeneration(dir: java.io.File): Option[String] =
-    graft.sources.StoreFs.anonymous(dir.getPath).generation("_MANIFEST")
 
   private def respond(ex: HttpExchange, code: Int, body: String,
                       ctype: String = "application/json"): Unit = {
@@ -636,13 +601,8 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
           else if (lim.contains(None))
             respond(ex, 400, """{"error":"limit must be an integer"}""")
           else try {
-            val limit = lim.flatten.getOrElse(1000).max(1).min(MaxLimit)
-            val generation = manifestGeneration(dir)
-            val key = (dir.getPath, generation.getOrElse(""), ver.flatten, limit)
-            val cached = storeReads.get(key)
             val store =
-              if (cached != null) null
-              else try graft.sources.PointStore.open(spark, dir.getPath)
+              try graft.sources.PointStore.open(spark, dir.getPath)
               catch { case e: IllegalArgumentException =>
                 val msg = Option(e.getMessage).getOrElse("bad store")
                 respond(ex,
@@ -651,9 +611,9 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
                     .replace("\\", "\\\\").replace("\"", "\\\"")}"}""")
                 null
               }
-            if (cached != null) respond(ex, 200, cached)
-            else if (store != null) {
+            if (store != null) {
               import org.apache.spark.sql.functions.col
+              val limit = lim.flatten.getOrElse(1000).max(1).min(MaxLimit)
               val frame = ver.flatten match {
                 case Some(v) => store.snapshotAt(v)
                 case None => store.snapshot
@@ -661,12 +621,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
               val keyCols = store.storedSchema.get("keys").map(col)
               val rows = frame.orderBy(keyCols: _*).limit(limit)
                 .toJSON.collect()
-              val body = rows.mkString("[", ",", "]")
-              // cache only what one generation answered: a commit that
-              // landed while the rows were read leaves the key unfilled
-              if (generation.isDefined && manifestGeneration(dir) == generation)
-                storeReads.put(key, body)
-              respond(ex, 200, body)
+              respond(ex, 200, rows.mkString("[", ",", "]"))
             }
           } catch {
             case e: IllegalArgumentException =>
@@ -3361,15 +3316,12 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
     if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS))
       pool.shutdownNow()
   }
+
+  /** Whether [[stop]] has ended every request thread. */
+  private[graft] def isTerminated: Boolean = pool.isTerminated
 }
 
 object QueryServer {
-
-  private val instances = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Entry cap of the `GET /store` response cache: a page holds at most
-    * `MaxLimit` rows, so the cache stays within tens of MB. */
-  private val StoreReadEntries = 16
 
   /** TCP_NODELAY on the JDK server's sockets: it writes a response's
     * headers and body separately, and without NODELAY the body waits out

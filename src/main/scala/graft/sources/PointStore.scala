@@ -430,14 +430,20 @@ final class PointStore(spark: SparkSession, path: String,
 
   /** The schema of [[snapshot]], from the member schemas alone: no file
     * listing, no scan planned — what a writer validating rows against
-    * the store needs. */
-  def snapshotSchema: org.apache.spark.sql.types.StructType = {
-    val ms = members
-    require(ms.nonEmpty, s"point store at $path is empty")
-    mergeAgg(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      memberUnion(ms))).schema
-  }
+    * the store needs. Under the legacy member read, whose union coerces
+    * type-widened members, it is that snapshot's planned schema. */
+  def snapshotSchema: org.apache.spark.sql.types.StructType =
+    if (legacyMemberRead) snapshot.schema
+    else {
+      val ms = members
+      require(ms.nonEmpty, s"point store at $path is empty")
+      mergeAgg(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        memberUnion(ms))).schema
+    }
+
+  private def legacyMemberRead: Boolean =
+    spark.conf.getOption("spark.graft.store.memberRead").contains("legacy")
 
   /** One multi-path scan over member directories (r20 optimization,
     * guide §6): the per-member `reduce(unionByName)` chain paid one
@@ -457,8 +463,7 @@ final class PointStore(spark: SparkSession, path: String,
     * footer-sweep job on EVERY read (measured: +4 s on the curate
     * lifecycle). */
   private def readMembers(ms: Seq[String]): DataFrame =
-    if (spark.conf.getOption("spark.graft.store.memberRead")
-        .contains("legacy"))
+    if (legacyMemberRead)
       ms.map(m => spark.read.parquet(sfs.pathOf(m)))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     else spark.read.schema(memberUnion(ms)).parquet(ms.map(sfs.pathOf): _*)

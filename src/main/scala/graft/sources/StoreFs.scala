@@ -58,32 +58,17 @@ final class StoreFs private (val fs: FileSystem, conf: Configuration,
   /** Non-empty lines of a small control file; Seq.empty when absent. */
   def linesIfExists(name: String): Seq[String] =
     if (!exists(name)) Seq.empty
-    else new String(bytesOf(name), java.nio.charset.StandardCharsets.UTF_8)
-      .trim.split("\n").toSeq.filter(_.nonEmpty)
-
-  private def bytesOf(name: String): Array[Byte] = {
-    val in = fs.open(child(name))
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-  }
-
-  /** Generation of a small control file: its modification time and a
-    * digest of its bytes; None when absent. Every commit through
-    * [[atomicWrite]] changes it, and so does deleting the store and
-    * committing it afresh (a new mtime even where the bytes repeat) —
-    * a key for anything derived from one committed state. */
-  def generation(name: String): Option[String] =
-    try {
-      val mtime = fs.getFileStatus(child(name)).getModificationTime
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(bytesOf(name)).map(b => f"$b%02x").mkString
-      Some(s"$mtime:$digest")
-    } catch { case _: java.io.FileNotFoundException => None }
+    else {
+      val in = fs.open(child(name))
+      try {
+        val out = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](8192)
+        var n = in.read(buf)
+        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+        new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+          .trim.split("\n").toSeq.filter(_.nonEmpty)
+      } finally in.close()
+    }
 
   /** Atomic small-file commit: write a temp sibling, rename over the
     * target — semantics per backend in the class doc.

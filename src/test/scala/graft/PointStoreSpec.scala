@@ -558,6 +558,25 @@ class PointStoreSpec extends SparkSpec {
     assert(store.snapshotSchema == store.snapshot.schema)
   }
 
+  test("under the legacy member read, snapshotSchema is the schema of the " +
+      "snapshot's coercing union of type-widened members") {
+    import spark.implicits._
+    val dir = freshDir("legacyschema")
+    val store = new PointStore(spark, dir, keys = Seq("k"), sums = Seq("d"),
+      maxes = Nil)
+    def part(k: String, t: String) = Seq((k, BigDecimal("1.50"))).toDF("k", "d")
+      .withColumn("d", col("d").cast(t))
+    // the sums settle at decimal(30,2) and decimal(38,2)
+    store.appendTagged("t0", part("a", "decimal(20,2)"))
+    store.appendTagged("t1", part("b", "decimal(38,2)"))
+    intercept[IllegalArgumentException](store.snapshotSchema)
+    spark.conf.set("spark.graft.store.memberRead", "legacy")
+    try {
+      assert(store.snapshotSchema == store.snapshot.schema)
+      assert(store.snapshotSchema("d").dataType.sql == "DECIMAL(38,2)")
+    } finally spark.conf.unset("spark.graft.store.memberRead")
+  }
+
   test("ledger-only empty delta: version bumps, tag consumed, no member, " +
     "changefeed windows and snapshot unchanged (r20)") {
     val dir = freshDir("emptydelta")
