@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persistent point-table store: the reference's `INSERT .. ON DUPLICATE
   * KEY UPDATE x = x + VALUES(x)` tables (crunch_global.sql:58-75)
@@ -9,9 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * The write path the reference's MariaDB table gives it for free — an
   * in-place keyed upsert — does not exist on immutable columnar storage,
-  * and the naive re-expression (read table, merge batch, rewrite table —
-  * what [[graft.streaming.IncrementalCruncher]] does per micro-batch) is
-  * O(table) PER BATCH: correct, but a 100 TB point table cannot be
+  * and the naive re-expression (read table, merge batch, rewrite table)
+  * is O(table) PER BATCH: correct, but a 100 TB point table cannot be
   * rewritten a thousand times a day. This store uses the LSM shape every
   * production table format (Delta, Hudi, Iceberg) converges on:
   *
@@ -86,33 +86,27 @@ final class PointStore(spark: SparkSession, path: String,
       quantiles.nonEmpty || mins.nonEmpty || topks.nonEmpty),
     "point store needs key columns and at least one measure")
 
+  import PointStore.{EmptyMember, LogLine, Manifest, SchemaLine, TagLine, VacLine}
+
   // all manifest/member path handling via the Hadoop FileSystem API —
   // the store works unchanged on file://, hdfs://, s3a:// (atomic-
   // rename semantics per backend documented on StoreFs)
   private val sfs = StoreFs(spark, path)
   sfs.mkdirs()
 
-  /** Raw manifest lines: member directories plus `#tag:` ledger entries
-    * (tags of tagged deltas that have been folded away by [[compact]] —
-    * kept so [[appendTagged]] idempotence survives compaction). */
-  private def manifestLines: Seq[String] = sfs.linesIfExists("_MANIFEST")
+  /** The manifest as committed now. Every public method reads it ONCE
+    * (mutators inside the writer lease), so one operation sees one
+    * committed generation: members, ledger, log and horizon agree. */
+  private def readManifest(): Manifest = PointStore.readManifest(sfs)
 
   /** Member directories of the current snapshot, oldest first. */
-  def members: Seq[String] = manifestLines.filterNot(_.startsWith("#"))
+  def members: Seq[String] = readManifest().members
 
   /** Tags consumed by [[appendTagged]], whether their delta is still a
-    * live member or already compacted into a base. Grows with distinct
-    * tags for the life of the store — tags are batch identifiers
-    * (manifest metadata), not data-sized. */
-  def consumedTags: Set[String] =
-    manifestLines.collect {
-      case l if l.startsWith(TagLine) => l.stripPrefix(TagLine)
-      case l if l.startsWith("delta-") && !l.matches("delta-[0-9]+") =>
-        l.stripPrefix("delta-")
-    }.toSet
-
-  private val TagLine = "#tag:"
-  private val LogLine = "#log:"
+    * live member or already compacted into a base (its `#tag:` ledger
+    * line). Grows with distinct tags for the life of the store — tags
+    * are batch identifiers (manifest metadata), not data-sized. */
+  def consumedTags: Set[String] = readManifest().tags
 
   // ---- self-describing schema (r12): the key/measure-class layout is
   // MANIFEST METADATA, not code-only knowledge — every commit records
@@ -130,9 +124,7 @@ final class PointStore(spark: SparkSession, path: String,
 
   /** The layout recorded in the manifest, if any (pre-r12 stores have
     * none and stay readable — their first new commit records one). */
-  def storedSchema: Option[Map[String, Seq[String]]] =
-    manifestLines.find(_.startsWith(PointStore.SchemaLine))
-      .map(PointStore.parseSchema)
+  def storedSchema: Option[Map[String, Seq[String]]] = readManifest().schema
 
   storedSchema.foreach { st =>
     require(st.getOrElse("keys", Nil) == keys,
@@ -154,9 +146,9 @@ final class PointStore(spark: SparkSession, path: String,
   /** Manifest schema line: the union of the stored layout and this
     * handle's declaration, so an old narrow handle committing to an
     * evolved store never erases the wider layout. */
-  private def schemaLine: String = {
-    val st = storedSchema.getOrElse(Map.empty)
-    PointStore.SchemaLine + classesOf.map { case (cls, cols) =>
+  private def schemaLine(m: Manifest): String = {
+    val st = m.schema.getOrElse(Map.empty)
+    SchemaLine + classesOf.map { case (cls, cols) =>
       val merged =
         if (cls == "keys") keys
         else (st.getOrElse(cls, Nil) ++ cols).distinct
@@ -164,33 +156,16 @@ final class PointStore(spark: SparkSession, path: String,
     }.mkString("|")
   }
 
-  /** Commit log of content changes: (version, delta dir), ascending.
-    * Only [[append]]/[[appendTagged]] bump the version — [[compact]]
-    * reorganizes storage without changing content, so a changefeed
-    * consumer never sees a compaction. Entries are pruned by [[vacuum]]
-    * (the changefeed retention horizon); until then the named dirs stay
-    * on disk even after compaction folds them into a base. */
-  private def changeLog: Seq[(Long, String)] =
-    manifestLines.collect { case l if l.startsWith(LogLine) =>
-      val rest = l.stripPrefix(LogLine)
-      val cut = rest.indexOf(':')
-      (rest.take(cut).toLong, rest.drop(cut + 1))
-    }.sortBy(_._1)
-
   /** Current content version: 0 for an empty/never-appended store, +1 per
-    * committed delta. Survives compaction and vacuum (the max also folds
-    * in [[vacuumedThrough]] so a fully-pruned log keeps counting up). */
-  def version: Long =
-    (vacuumedThrough +: changeLog.map(_._1)).max
-
-  private val VacLine = "#vacuumed:"
+    * committed delta. Only [[append]]/[[appendTagged]] bump it —
+    * [[compact]] reorganizes storage without changing content. Survives
+    * compaction and vacuum (a fully-pruned log keeps counting up from
+    * [[vacuumedThrough]]). */
+  def version: Long = readManifest().version
 
   /** Highest version pruned from the change log by [[vacuum]] — reads at
     * or below this horizon must resync from [[snapshot]]. */
-  def vacuumedThrough: Long =
-    manifestLines.collect { case l if l.startsWith(VacLine) =>
-      l.stripPrefix(VacLine).toLong
-    }.foldLeft(0L)(math.max)
+  def vacuumedThrough: Long = readManifest().vacuumedThrough
 
   /** Changefeed read: the key-grain partial aggregate of versions in
     * `(since, until]` — O(changes), never O(table), and valid across
@@ -206,18 +181,21 @@ final class PointStore(spark: SparkSession, path: String,
     * [[snapshot]] instead of silently losing rows); a caught-up read on
     * a non-empty store returns a schema-stable empty frame (an
     * empty store has no schema yet, and says so). */
-  def changesSince(since: Long, until: Long = Long.MaxValue): DataFrame = {
-    require(since >= vacuumedThrough,
-      s"changefeed vacuumed through $vacuumedThrough — version $since is " +
+  def changesSince(since: Long, until: Long = Long.MaxValue): DataFrame =
+    changesOf(readManifest(), since, until)
+
+  private def changesOf(m: Manifest, since: Long, until: Long): DataFrame = {
+    require(since >= m.vacuumedThrough,
+      s"changefeed vacuumed through ${m.vacuumedThrough} — version $since is " +
         "no longer readable; resync from snapshot")
     require(until >= since, s"empty window ($since, $until]")
-    val dirs = changeLog.filter(e => e._1 > since && e._1 <= until).map(_._2)
-      .filterNot(_ == PointStore.EmptyMember) // ledger-only empty deltas
+    val dirs = m.changeLog.filter(e => e._1 > since && e._1 <= until).map(_._2)
+      .filterNot(_ == EmptyMember) // ledger-only empty deltas
     if (dirs.isEmpty) {
-      require(members.nonEmpty,
+      require(m.members.nonEmpty,
         s"point store at $path is empty — the changefeed has no schema " +
           "before the first append")
-      snapshot.limit(0)
+      snapshotOf(m).limit(0)
     } else mergeAgg(readMembers(dirs))
   }
 
@@ -251,13 +229,13 @@ final class PointStore(spark: SparkSession, path: String,
       // whose tag already committed must NOT re-replace the base — the
       // version bump + vacuum-horizon advance would force this store's own
       // consumers into an unnecessary cascading resync
-      if (consumedTags(tag)) return
-      val name = f"base-$nextSeq%06d"
-      writeMemberParquet(name,
-        mergeAgg(partial.select((keys ++ measureCols).map(col): _*)))
-      val v = version + 1
-      writeManifest((name +: (consumedTags.filter(keep) ++ adopt + tag)
-        .toSeq.sorted.map(TagLine + _)) :+ s"$VacLine$v")
+      val m = readManifest()
+      if (!m.tags(tag)) {
+        val name = f"base-$nextSeq%06d"
+        writeMemberParquet(name, keyGrain(partial))
+        writeManifest(m, (name +: (m.tags.filter(keep) ++ adopt + tag)
+          .toSeq.sorted.map(TagLine + _)) :+ s"$VacLine${m.version + 1}")
+      }
     }
 
   /** Member parquet write + schema-memo seeding. The memo entry is the
@@ -276,9 +254,10 @@ final class PointStore(spark: SparkSession, path: String,
       PointStore.readSchemaOf(df.schema))
   }
 
-  private def writeManifest(ms: Seq[String]): Unit =
+  /** Commit `lines` as the manifest that follows `m`. */
+  private def writeManifest(m: Manifest, lines: Seq[String]): Unit =
     sfs.atomicWrite("_MANIFEST",
-      (ms.filterNot(_.startsWith(PointStore.SchemaLine)) :+ schemaLine)
+      (lines.filterNot(_.startsWith(SchemaLine)) :+ schemaLine(m))
         .mkString("\n").getBytes)
 
   /** Next commit sequence number: one past the highest ever written —
@@ -292,7 +271,7 @@ final class PointStore(spark: SparkSession, path: String,
   }
 
   /** Deltas currently live in the manifest (excludes the base). */
-  def deltaCount: Int = members.count(_.startsWith("delta-"))
+  def deltaCount: Int = readManifest().members.count(_.startsWith("delta-"))
 
   private def measureCols: Seq[String] =
     sums ++ maxes ++ sketches ++ quantiles ++ mins ++ topks
@@ -319,11 +298,16 @@ final class PointStore(spark: SparkSession, path: String,
     df.groupBy(keys.map(col): _*).agg(exprs.head, exprs.tail: _*)
   }
 
+  /** A write's partial at the key grain, every declared column strict. */
+  private def keyGrain(partial: DataFrame): DataFrame =
+    mergeAgg(partial.select((keys ++ measureCols).map(col): _*))
+
   /** Fold one batch into the store. `partial` may be at any grain — it is
     * aggregated to the key grain here, so O(delta file) = O(distinct keys
     * in the batch), not O(batch rows). */
-  def append(partial: DataFrame): Unit =
-    writeDelta(f"delta-$nextSeq%06d", partial)
+  def append(partial: DataFrame): Unit = sfs.withWriterLease() {
+    writeDelta(readManifest(), f"delta-$nextSeq%06d", partial)
+  }
 
   /** Idempotent append for at-least-once delivery (foreachBatch retry
     * semantics): a delta whose `tag` was ever committed — live in the
@@ -337,60 +321,61 @@ final class PointStore(spark: SparkSession, path: String,
     * sequence-numbered namespace of [[append]]/[[compact]]). */
   def appendTagged(tag: String, partial: DataFrame,
                    leaseWaitMs: Long = 0L): Boolean =
-    // check-and-commit INSIDE the writer lease (re-entrant through
-    // writeDelta's own acquire): two writers redelivering the same tag
-    // otherwise both pass the check before either commits, and the
-    // second manifest append folds the delta twice forever
+    // check-and-commit INSIDE the writer lease: two writers redelivering
+    // the same tag otherwise both pass the check before either commits,
+    // and the second manifest append folds the delta twice forever
     sfs.withWriterLease(waitMs = leaseWaitMs) {
       // ledger check first: a tag recorded as consumed — including a
-      // live non-numeric tagged member, which consumedTags reads off
-      // the manifest — stays a redelivery no-op even if it predates the
-      // namespace contract below
-      if (consumedTags(tag)) false
+      // live non-numeric tagged member, which the manifest's tags read
+      // off its member list — stays a redelivery no-op even if it
+      // predates the namespace contract of requireTagName
+      val m = readManifest()
+      if (m.tags(tag)) false
       else {
-        // loud contract for everything else, not doc-only: a purely-
-        // numeric tag's member name lands in append/compact's
-        // sequence-numbered `delta-N` namespace, where consumedTags
-        // cannot tell it from an untagged delta — post-compaction
-        // redeliveries would double-count, and a fresh zero-padded tag
-        // colliding with an existing `delta-000NNN` member would be
-        // silently swallowed as "already committed" (data loss)
-        require(tag.matches("[A-Za-z0-9._-]+") && !tag.forall(_.isDigit),
-          s"append tag '$tag' must be filesystem-safe and non-numeric")
-        writeDelta(s"delta-$tag", partial); true
+        requireTagName(tag)
+        writeDelta(m, s"delta-$tag", partial); true
       }
     }
 
-  // writer lease on every mutator (the enforced single-writer contract,
-  // StoreFs.withWriterLease): a concurrent second driver fails fast with
-  // the holder named instead of interleaving manifest commits
-  private def writeDelta(name: String, partial: DataFrame): Unit =
-    sfs.withWriterLease() {
-      writeMemberParquet(name,
-        mergeAgg(partial.select((keys ++ measureCols).map(col): _*)))
-      // r20 optimization: a TAGGED delta that folded ZERO rows — half of
-      // every maintained lifecycle's micro-batches is the watermark-
-      // advance batch that finalized nothing — commits as a LEDGER-ONLY
-      // entry (the [[appendTaggedEmpty]] manifest shape: tag line +
-      // version log naming the empty member "-") and its schema-only
-      // directory is reclaimed, instead of joining the member list that
-      // every later snapshot scans forever. The decision reads the just-
-      // written footers DRIVER-side (a few ms, no extra Spark job — the
-      // one plan execution stays the write above). The store's FIRST
-      // commit always stays a real member (the snapshot's schema comes
-      // from member footers); untagged sequence-numbered deltas keep the
-      // old behavior (a bare number cannot live in the tag ledger).
-      val tag = name.stripPrefix("delta-")
-      val emptyable = members.nonEmpty && name.startsWith("delta-") &&
-        !tag.forall(_.isDigit)
-      if (emptyable && parquetRowCount(sfs.pathOf(name)) == 0L) {
-        writeManifest(manifestLines :+ s"$TagLine$tag" :+
-          s"$LogLine${version + 1}:${PointStore.EmptyMember}")
-        sfs.deleteChild(name)
-        PointStore.memberSchemaMemo.remove(sfs.pathOf(name))
-      } else
-        writeManifest(manifestLines :+ name :+ s"$LogLine${version + 1}:$name")
-    }
+  /** A purely-numeric tag's member would land in append/compact's
+    * `delta-N` namespace, where the ledger cannot tell it from an
+    * untagged delta: redeliveries would double-count, and a tag equal to
+    * a live `delta-000NNN` would be swallowed as already committed. */
+  private def requireTagName(tag: String): Unit =
+    require(tag.matches("[A-Za-z0-9._-]+") && !tag.forall(_.isDigit),
+      s"append tag '$tag' must be filesystem-safe and non-numeric")
+
+  /** Ledger-only commit of `tag`: its `#tag:` line plus a version bump
+    * whose change-log entry names [[PointStore.EmptyMember]]. */
+  private def commitEmpty(m: Manifest, tag: String): Unit =
+    writeManifest(m, m.lines :+ s"$TagLine$tag" :+
+      s"$LogLine${m.version + 1}:$EmptyMember")
+
+  // callers hold the writer lease (the enforced single-writer contract,
+  // StoreFs.withWriterLease) and read `m` under it
+  private def writeDelta(m: Manifest, name: String, partial: DataFrame): Unit = {
+    writeMemberParquet(name, keyGrain(partial))
+    // r20 optimization: a TAGGED delta that folded ZERO rows — half of
+    // every maintained lifecycle's micro-batches is the watermark-
+    // advance batch that finalized nothing — commits as a LEDGER-ONLY
+    // entry (the [[appendTaggedEmpty]] manifest shape) and its
+    // schema-only directory is reclaimed, instead of joining the member
+    // list that every later snapshot scans forever. The decision reads
+    // the just-written footers DRIVER-side (a few ms, no extra Spark job
+    // — the one plan execution stays the write above). The store's FIRST
+    // commit always stays a real member (the snapshot's schema comes
+    // from member footers); untagged sequence-numbered deltas keep the
+    // old behavior (a bare number cannot live in the tag ledger).
+    val tag = name.stripPrefix("delta-")
+    val emptyable = m.members.nonEmpty && name.startsWith("delta-") &&
+      !tag.forall(_.isDigit)
+    if (emptyable && parquetRowCount(sfs.pathOf(name)) == 0L) {
+      commitEmpty(m, tag)
+      sfs.deleteChild(name)
+      PointStore.memberSchemaMemo.remove(sfs.pathOf(name))
+    } else
+      writeManifest(m, m.lines :+ name :+ s"$LogLine${m.version + 1}:$name")
+  }
 
   /** Row count of a just-written parquet directory from its footers —
     * driver-side metadata, no Spark job. */
@@ -414,7 +399,7 @@ final class PointStore(spark: SparkSession, path: String,
     * SCHEMA EVOLUTION (additive): a store may GROW measure columns over
     * its life — open the same directory with a wider measure list and
     * append; members written before the new column simply lack it, the
-    * union null-fills (`allowMissingColumns`), and every merge skips
+    * scan null-fills it, and every merge skips
     * nulls (SUM/MAX/MIN by SQL semantics, the sketch merges by their
     * all-null→NULL contract), so history never needs a rewrite — the
     * nightly table gains a metric and old keys read NULL for it until
@@ -422,28 +407,23 @@ final class PointStore(spark: SparkSession, path: String,
     * renaming a measure is NOT supported this way (open with the old
     * list or compact first); keys cannot evolve (they define the
     * grain). */
-  def snapshot: DataFrame = {
-    val ms = members
-    require(ms.nonEmpty, s"point store at $path is empty")
-    mergeAgg(readMembers(ms))
+  def snapshot: DataFrame = snapshotOf(readManifest())
+
+  private def snapshotOf(m: Manifest): DataFrame =
+    mergeAgg(readMembers(liveMembers(m)))
+
+  private def liveMembers(m: Manifest): Seq[String] = {
+    require(m.members.nonEmpty, s"point store at $path is empty")
+    m.members
   }
 
   /** The schema of [[snapshot]], from the member schemas alone: no file
     * listing, no scan planned — what a writer validating rows against
-    * the store needs. Under the legacy member read, whose union coerces
-    * type-widened members, it is that snapshot's planned schema. */
-  def snapshotSchema: org.apache.spark.sql.types.StructType =
-    if (legacyMemberRead) snapshot.schema
-    else {
-      val ms = members
-      require(ms.nonEmpty, s"point store at $path is empty")
-      mergeAgg(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        memberUnion(ms))).schema
-    }
-
-  private def legacyMemberRead: Boolean =
-    spark.conf.getOption("spark.graft.store.memberRead").contains("legacy")
+    * the store needs. */
+  def snapshotSchema: StructType =
+    mergeAgg(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      memberUnion(liveMembers(readManifest())))).schema
 
   /** One multi-path scan over member directories (r20 optimization,
     * guide §6): the per-member `reduce(unionByName)` chain paid one
@@ -463,44 +443,34 @@ final class PointStore(spark: SparkSession, path: String,
     * footer-sweep job on EVERY read (measured: +4 s on the curate
     * lifecycle). */
   private def readMembers(ms: Seq[String]): DataFrame =
-    if (legacyMemberRead)
-      ms.map(m => spark.read.parquet(sfs.pathOf(m)))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    else spark.read.schema(memberUnion(ms)).parquet(ms.map(sfs.pathOf): _*)
+    spark.read.schema(memberUnion(ms)).parquet(ms.map(sfs.pathOf): _*)
 
   /** The by-name union of the members' (memoized) schemas — the schema
-    * [[readMembers]] scans with. */
-  private def memberUnion(ms: Seq[String]): org.apache.spark.sql.types.StructType = {
-    val perMember = ms.map { m =>
-      val p = sfs.pathOf(m)
-      m -> PointStore.memberSchemaMemo.computeIfAbsent(p,
+    * [[readMembers]] scans with. A type that differs across members
+    * takes the wider one the parquet reader can widen to
+    * ([[PointStore.widerOf]]): SUM adds 10 digits of decimal precision,
+    * so a compacted base holds decimal(38,s) beside decimal(p+10,s)
+    * deltas. Any other change fails loudly, naming member and column. */
+  private def memberUnion(ms: Seq[String]): StructType =
+    StructType(ms.foldLeft(Vector.empty[StructField]) { (union, m) =>
+      val schema = PointStore.memberSchemaMemo.computeIfAbsent(sfs.pathOf(m),
         q => spark.read.parquet(q).schema)
-    }
-    org.apache.spark.sql.types.StructType(perMember.foldLeft(
-      (Map.empty[String, org.apache.spark.sql.types.StructField],
-        Vector.empty[org.apache.spark.sql.types.StructField])) {
-      case ((byName, ordered), (m, schema)) =>
-        schema.fields.foldLeft((byName, ordered)) {
-          case ((bn, ord), f) =>
-            bn.get(f.name) match {
-              case Some(g) =>
-                // additive-only evolution, ENFORCED (r21 ADVICE): the
-                // legacy unionByName inserted coercing casts on a
-                // type-widened column; the first-member-wins union
-                // would instead mis-read it under the vectorized
-                // reader — refuse loudly, naming member and column
-                // .sql ignores nullability (sameType is private[sql])
-                require(g.dataType.sql == f.dataType.sql,
-                  s"member '$m' of point store at $path declares " +
-                    s"column '${f.name}' as ${f.dataType.sql} but an " +
-                    s"earlier member holds ${g.dataType.sql} — measure " +
-                    "types cannot change across members (compact first)")
-                (bn, ord)
-              case None => (bn + (f.name -> f), ord :+ f)
-            }
+      schema.fields.foldLeft(union) { (acc, f) =>
+        acc.indexWhere(_.name == f.name) match {
+          case -1 => acc :+ f
+          case i =>
+            val g = acc(i)
+            val wider = PointStore.widerOf(g.dataType, f.dataType)
+              .getOrElse(throw new IllegalArgumentException(
+                s"member '$m' of point store at $path declares " +
+                  s"column '${f.name}' as ${f.dataType.sql} but an " +
+                  s"earlier member holds ${g.dataType.sql} — measure " +
+                  "types cannot change across members, except by a " +
+                  "widening the parquet reader performs"))
+            acc.updated(i, g.copy(dataType = wider))
         }
-    }._2)
-  }
+      }
+    })
 
   /** TIME TRAVEL: the store's content as of `version` — the merge-fold
     * of EVERY change window up to it, which equals the snapshot a
@@ -515,18 +485,19 @@ final class PointStore(spark: SparkSession, path: String,
     * may ask; vacuum with the default retains nothing and ends time
     * travel). The current version is always readable. */
   def snapshotAt(asOf: Long): DataFrame = {
-    require(asOf <= version,
-      s"version $asOf is in the future — current version is $version")
-    if (asOf == version) snapshot // current content is always readable
+    val m = readManifest()
+    require(asOf <= m.version,
+      s"version $asOf is in the future — current version is ${m.version}")
+    if (asOf == m.version) snapshotOf(m) // current content is always readable
     else {
-      require(vacuumedThrough == 0,
+      require(m.vacuumedThrough == 0,
         s"time travel to version $asOf needs the full change history, " +
-          s"but the store was vacuumed through $vacuumedThrough — " +
+          s"but the store was vacuumed through ${m.vacuumedThrough} — " +
           "content at or below the horizon is folded into bases the " +
           "log cannot slice by version; retain history (vacuum " +
           "retainVersions covering the whole log) to keep past " +
           "versions readable")
-      changesSince(0, asOf)
+      changesOf(m, 0, asOf)
     }
   }
 
@@ -548,10 +519,11 @@ final class PointStore(spark: SparkSession, path: String,
     * reads of a keyed slice prune files on ANY key subset
     * (PointStoreSpec measures the per-file bounding boxes). */
   def compact(clusterFiles: Int = 0): Unit = sfs.withWriterLease() {
-    val ms = members
+    val m = readManifest()
+    val ms = m.members
     if (ms.size > 1 || (ms.size == 1 && !ms.head.startsWith("base-"))) {
       val name = f"base-$nextSeq%06d"
-      val snap = snapshot
+      val snap = snapshotOf(m)
       val out =
         if (clusterFiles <= 0) snap
         else {
@@ -567,13 +539,11 @@ final class PointStore(spark: SparkSession, path: String,
             .sortWithinPartitions(col("__z"))
             .drop("__z")
         }
-      out.write.parquet(sfs.pathOf(name))
-      PointStore.memberSchemaMemo.put(sfs.pathOf(name),
-        PointStore.readSchemaOf(out.schema))
+      writeMemberParquet(name, out)
       // content is unchanged, so the version does not bump; the change
       // log and vacuum horizon carry over verbatim
-      writeManifest((name +: consumedTags.toSeq.sorted.map(TagLine + _)) ++
-        manifestLines.filter(l => l.startsWith(LogLine) || l.startsWith(VacLine)))
+      writeManifest(m, (name +: m.tags.toSeq.sorted.map(TagLine + _)) ++
+        m.lines.filter(l => l.startsWith(LogLine) || l.startsWith(VacLine)))
     }
   }
 
@@ -591,29 +561,26 @@ final class PointStore(spark: SparkSession, path: String,
     * [[appendTagged]]). */
   def appendTaggedEmpty(tag: String, leaseWaitMs: Long = 0L): Boolean =
     sfs.withWriterLease(waitMs = leaseWaitMs) {
-      if (consumedTags(tag)) false
+      val m = readManifest()
+      if (m.tags(tag)) false
       else {
         // mirror writeDelta's emptyable condition (r21 ADVICE): an empty
         // store's first commit must be a REAL member (the snapshot's
         // schema comes from member footers) — a ledger-only version 1
         // would leave version > 0 with every read failing "store is
         // empty", the state the writeDelta path deliberately avoids
-        require(members.nonEmpty,
+        require(m.members.nonEmpty,
           s"point store at $path is empty — the first commit must carry " +
             "content (appendTagged); a ledger-only entry would leave the " +
             "store versioned but unreadable")
-        require(tag.matches("[A-Za-z0-9._-]+") && !tag.forall(_.isDigit),
-          s"append tag '$tag' must be filesystem-safe and non-numeric")
-        writeManifest(manifestLines :+ s"$TagLine$tag" :+
-          s"$LogLine${version + 1}:${PointStore.EmptyMember}")
+        requireTagName(tag)
+        commitEmpty(m, tag)
         true
       }
     }
 
   /** Order-preserving Long view of a key column for Z-order quantization. */
-  private def keyAsLong(c: Column,
-                        dt: org.apache.spark.sql.types.DataType): Column = {
-    import org.apache.spark.sql.types._
+  private def keyAsLong(c: Column, dt: DataType): Column = {
     dt match {
       case StringType =>
         // first 7 bytes big-endian, NUL-padded: positional compare, fits
@@ -636,12 +603,13 @@ final class PointStore(spark: SparkSession, path: String,
     * instead of silently missing rows. The default retains nothing —
     * pure space reclamation, the pre-changefeed behavior. */
   def vacuum(retainVersions: Long = 0L): Unit = sfs.withWriterLease() {
-    val horizon = math.max(vacuumedThrough, version - retainVersions)
-    writeManifest(
-      manifestLines.filterNot(l => l.startsWith(LogLine) || l.startsWith(VacLine)) ++
-        changeLog.filter(_._1 > horizon).map { case (v, n) => s"$LogLine$v:$n" } :+
-        s"$VacLine$horizon")
-    val live = members.toSet ++ changeLog.map(_._2)
+    val m = readManifest()
+    val horizon = math.max(m.vacuumedThrough, m.version - retainVersions)
+    val kept = m.changeLog.filter(_._1 > horizon)
+    writeManifest(m,
+      m.lines.filterNot(l => l.startsWith(LogLine) || l.startsWith(VacLine)) ++
+        kept.map { case (v, n) => s"$LogLine$v:$n" } :+ s"$VacLine$horizon")
+    val live = m.members.toSet ++ kept.map(_._2)
     sfs.dirNames().filterNot(live).foreach(sfs.deleteChild)
   }
 }
@@ -659,16 +627,13 @@ object PointStore {
     * StructType, never rows); see [[PointStore!.readMembers]]. Every
     * member this JVM writes is seeded here at write time. */
   private[graft] val memberSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** The schema `spark.read.parquet` reports for a member written from a
     * frame of schema `s`: the same fields, every level nullable (file
     * sources read everything as nullable). Seeds the memo at write time,
     * so a fresh member's footer is never read back just for its schema. */
-  private[sources] def readSchemaOf(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  private[sources] def readSchemaOf(s: StructType): StructType = {
     def nullable(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map(f =>
         f.copy(dataType = nullable(f.dataType), nullable = true)))
@@ -680,14 +645,65 @@ object PointStore {
     nullable(s).asInstanceOf[StructType]
   }
 
-  private[sources] val SchemaLine = "#schema:"
+  /** The type a scan may request for a column members hold as `a` and
+    * as `b`: the same, or the wider one Spark's parquet reader widens the
+    * other to (int to long; a decimal to one with no fewer integer and
+    * fraction digits; int to a decimal with 10 integer digits or more). */
+  private[sources] def widerOf(a: DataType, b: DataType): Option[DataType] = {
+    def widens(from: DataType, to: DataType): Boolean = (from, to) match {
+      case (IntegerType, LongType) => true
+      case (f: DecimalType, t: DecimalType) =>
+        t.scale >= f.scale && t.precision - t.scale >= f.precision - f.scale
+      case (IntegerType, t: DecimalType) => t.precision - t.scale >= 10
+      case _ => false
+    }
+    // .sql ignores nullability (sameType is private[sql])
+    if (a.sql == b.sql) Some(a)
+    else if (widens(a, b)) Some(b)
+    else if (widens(b, a)) Some(a)
+    else None
+  }
 
-  private[sources] def parseSchema(line: String): Map[String, Seq[String]] =
-    line.stripPrefix(SchemaLine).split("\\|").map { part =>
-      val cut = part.indexOf('=')
-      part.take(cut) ->
-        part.drop(cut + 1).split(",").toSeq.filter(_.nonEmpty)
-    }.toMap
+  private[sources] val SchemaLine = "#schema:"
+  private[sources] val TagLine = "#tag:"
+  private[sources] val LogLine = "#log:"
+  private[sources] val VacLine = "#vacuumed:"
+
+  /** One parsed read of `_MANIFEST` (absent: no lines). Lines are member
+    * dirs, oldest first; `#tag:` tags of compacted-away tagged deltas (a
+    * live `delta-<tag>` names its own); `#log:<version>:<dir>` change-log
+    * entries; `#vacuumed:` horizons; the `#schema:` layout record. */
+  private[sources] final class Manifest(val lines: Seq[String]) {
+    lazy val members: Seq[String] = lines.filterNot(_.startsWith("#"))
+    lazy val tags: Set[String] = lines.collect {
+      case l if l.startsWith(TagLine) => l.stripPrefix(TagLine)
+      case l if l.startsWith("delta-") && !l.matches("delta-[0-9]+") =>
+        l.stripPrefix("delta-")
+    }.toSet
+    /** (version, delta dir), ascending. */
+    lazy val changeLog: Seq[(Long, String)] =
+      lines.collect { case l if l.startsWith(LogLine) =>
+        val rest = l.stripPrefix(LogLine)
+        val cut = rest.indexOf(':')
+        (rest.take(cut).toLong, rest.drop(cut + 1))
+      }.sortBy(_._1)
+    lazy val vacuumedThrough: Long =
+      lines.collect { case l if l.startsWith(VacLine) =>
+        l.stripPrefix(VacLine).toLong
+      }.foldLeft(0L)(math.max)
+    lazy val version: Long = (vacuumedThrough +: changeLog.map(_._1)).max
+    lazy val schema: Option[Map[String, Seq[String]]] =
+      lines.find(_.startsWith(SchemaLine)).map { l =>
+        l.stripPrefix(SchemaLine).split("\\|").map { part =>
+          val cut = part.indexOf('=')
+          part.take(cut) ->
+            part.drop(cut + 1).split(",").toSeq.filter(_.nonEmpty)
+        }.toMap
+      }
+  }
+
+  private[sources] def readManifest(sfs: StoreFs): Manifest =
+    new Manifest(sfs.linesIfExists("_MANIFEST"))
 
   /** Open a store from its directory alone — the layout comes from the
     * manifest's schema record, no caller-side configuration (what a
@@ -696,10 +712,9 @@ object PointStore {
     * schema record (open it once with the explicit constructor; its
     * next commit records the layout). */
   def open(spark: SparkSession, path: String): PointStore = {
-    val lines = StoreFs(spark, path).linesIfExists("_MANIFEST")
-    require(lines.nonEmpty, s"no point store at $path")
-    val schema = lines.find(_.startsWith(SchemaLine)).map(parseSchema)
-      .getOrElse(throw new IllegalArgumentException(
+    val m = readManifest(StoreFs(spark, path))
+    require(m.lines.nonEmpty, s"no point store at $path")
+    val schema = m.schema.getOrElse(throw new IllegalArgumentException(
         s"point store at $path has no schema record (written before " +
           "self-describing manifests) — construct it with the explicit " +
           "layout once; its next commit records the schema"))
@@ -714,22 +729,13 @@ object PointStore {
   }
 
   /** Content version of the store at `path` WITHOUT opening it (no
-    * schema needed — manifest-only parse, same rule as
-    * [[PointStore.version]]: max of the change-log versions and the
-    * vacuum horizon). None when no store exists there. Serves the
+    * schema needed — the same manifest parse as [[PointStore!.version]]).
+    * None when no store exists there. Serves the
     * QueryServer `/version` route, where the caller knows only a
     * directory name. */
   def versionOf(path: String): Option[Long] = {
-    val sfs = StoreFs.anonymous(path)
-    if (!sfs.exists("_MANIFEST")) None
-    else {
-      val lines = sfs.linesIfExists("_MANIFEST")
-      val logs = lines.collect { case l if l.startsWith("#log:") =>
-        val rest = l.stripPrefix("#log:"); rest.take(rest.indexOf(':')).toLong }
-      val vac = lines.collect { case l if l.startsWith("#vacuumed:") =>
-        l.stripPrefix("#vacuumed:").toLong }
-      Some((0L +: (vac ++ logs)).max)
-    }
+    val m = readManifest(StoreFs.anonymous(path))
+    if (m.lines.isEmpty) None else Some(m.version)
   }
 
   /** `point_store_roundtrip`: the reference's worker lifecycle against a

@@ -5,11 +5,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem face of the persisted-store family — [[PointStore]],
-  * [[graft.operators.DedupIndex]], [[graft.operators.IvfIndex]], and the
-  * [[graft.streaming.IncrementalCruncher]] batch ledger all route their
-  * manifest/member path handling through this one wrapper over the
-  * Hadoop `FileSystem` API, so a store directory may live on ANY Hadoop
-  * filesystem: `file://` in this sandbox, `hdfs://` / `s3a://` on a
+  * [[graft.operators.DedupIndex]] and [[graft.operators.IvfIndex]] all
+  * route their manifest/member path handling through this one wrapper
+  * over the Hadoop `FileSystem` API, so a store directory may live on ANY
+  * Hadoop filesystem: `file://` in this sandbox, `hdfs://` / `s3a://` on a
   * cluster. The data members always could (they are written and read via
   * `spark.read/write.parquet`); this closes the gap for the manifests —
   * the precondition for the incremental family's 100 TB claims, where

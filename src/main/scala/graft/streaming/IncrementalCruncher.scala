@@ -18,23 +18,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[result]], which IncrementalSpec equates with the one-shot aggregate.
   *
   * Delivery is exactly-once under foreachBatch's at-least-once retries:
-  * a batch id is folded at most once, enforced by two layers —
-  * `_COMMITTED` (the cruncher's batch-id ledger, surviving compaction)
-  * and the store's tagged-delta manifest check (covering a crash between
-  * delta commit and ledger write, a window in which no compaction can
-  * run because batches execute sequentially). Both commit points are
-  * atomic file moves; a half-written delta directory from a crashed
-  * attempt is overwritten on retry, never read (only the manifest makes
-  * a delta visible).
+  * batch id `N` is appended as the store's tagged delta `bN`, and the
+  * store's manifest flip commits the delta and its tag together — the
+  * one ledger and the one commit point. A redelivered id is a no-op
+  * (the tag stays in the manifest's `#tag:` ledger across compaction),
+  * and a half-written delta directory from a crashed attempt is
+  * overwritten on retry, never read (only the manifest makes a delta
+  * visible).
   */
 /** @param onCommit worker.js:184-190's `crunch_update` publish as a
   *   hook: invoked with (batchId, store content version) once per
-  *   COMMITTED batch — a redelivered already-committed batch id is a
-  *   no-op and does not re-notify, so a consumer (the web tier's cache
-  *   refresh in the reference) observes each commit exactly once.
-  *   Fires after the commit point, like the reference's notify-after-ack
-  *   — a crash between commit and notify loses the notification, not
-  *   the data, and the store version (also served by
+  *   COMMITTED batch, exactly when the store's append commits — a
+  *   redelivered already-committed batch id is a no-op and does not
+  *   re-notify, so a consumer (the web tier's cache refresh in the
+  *   reference) observes each commit at most once. Fires after the
+  *   commit point, like the reference's notify-after-ack: a crash
+  *   between the manifest flip and the notify loses the notification,
+  *   not the data, and the store version (also served by
   *   [[graft.server.QueryServer]]'s `/version`) lets a consumer
   *   re-sync. */
 final class IncrementalCruncher(spark: SparkSession, stateDir: String,
@@ -46,19 +46,11 @@ final class IncrementalCruncher(spark: SparkSession, stateDir: String,
     sums = Seq("played", "wins", "time_spent_d", "gold_d"),
     maxes = Seq("last_match"))
 
-  // the batch ledger lives next to the store's manifest, and like it
-  // goes through the Hadoop FileSystem API (StoreFs) so the whole state
-  // dir may live on hdfs:// / s3a:// — the cruncher's checkpoint
-  // already could (Structured Streaming requires it)
-  private val sfs = graft.sources.StoreFs(spark, stateDir)
+  private val BatchTag = "b([0-9]+)".r
 
-  /** Batch ids already folded into the store. */
+  /** Batch ids already folded into the store: its consumed `bN` tags. */
   def committedBatches: Set[Long] =
-    sfs.linesIfExists("_COMMITTED").map(_.toLong).toSet
-
-  private def commitBatch(id: Long): Unit =
-    sfs.atomicWrite("_COMMITTED",
-      (committedBatches + id).toSeq.sorted.mkString("\n").getBytes)
+    store.consumedTags.collect { case BatchTag(id) => id.toLong }
 
   /** The live point table (None before the first batch). */
   def pointTable(): Option[DataFrame] =
@@ -71,9 +63,7 @@ final class IncrementalCruncher(spark: SparkSession, stateDir: String,
     * until executed. Call [[vacuum]] from the owner at a point where no
     * such plan is outstanding. */
   def mergeBatch(batch: DataFrame, batchId: Long): Unit =
-    if (!committedBatches(batchId)) {
-      store.appendTagged(s"b$batchId", Merge.pointAgg(batch))
-      commitBatch(batchId)
+    if (store.appendTagged(s"b$batchId", Merge.pointAgg(batch))) {
       onCommit(batchId, store.version)
       if (store.deltaCount >= compactEvery) store.compact()
     }

@@ -8,11 +8,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * of (vec_id, embedding) rows is assigned with the index's EXISTING
   * quantizers and committed through [[IvfIndex.appendTagged]] — the
   * tagged manifest flip gives exactly-once indexing under foreachBatch's
-  * at-least-once redeliveries, the same two-layer contract as
-  * [[IncrementalCruncher]] (ledger + atomic visibility flip; a
-  * half-written member directory from a crashed attempt is overwritten
-  * on retry and never read, because only the manifest makes it
-  * visible). Searches see old ∪ new immediately after each commit with
+  * at-least-once redeliveries, the same contract as
+  * [[IncrementalCruncher]] (one manifest flip commits the member and its
+  * tag; a half-written member directory from a crashed attempt is
+  * overwritten on retry and never read, because only the manifest makes
+  * it visible). Searches see old ∪ new immediately after each commit with
   * unchanged partition pruning (StreamingIndexSpec equates the
   * post-stream [[IvfIndex.searchPq]] with a from-scratch rebuild's).
   *

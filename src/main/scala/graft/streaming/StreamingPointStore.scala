@@ -11,12 +11,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * crunch) and commits through [[PointStore.appendTagged]] (the ON
   * DUPLICATE KEY fold), so the table's merge-on-read snapshot is
   * current to the last ingested batch at O(batch) write cost.
-  * [[IncrementalCruncher]] is the same loop with O(table)-per-batch
-  * writes — correct, and the right shape for a small hot table; THIS is
-  * the 100 TB shape, and it carries every measure class the store
-  * supports, sketch columns included (a streaming vocabulary/quantile
-  * tracker is just a store with sketch measures — StreamingStoreSpec
-  * drives exactly that).
+  * [[IncrementalCruncher]] is the same loop with the reference's fixed
+  * point-table layout; THIS one takes any `partialOf` and carries every
+  * measure class the store supports, sketch columns included (a
+  * streaming vocabulary/quantile tracker is just a store with sketch
+  * measures — StreamingStoreSpec drives exactly that).
   *
   * Exactly-once under foreachBatch's at-least-once redeliveries comes
   * from the store's tagged manifest flip, the contract shared with

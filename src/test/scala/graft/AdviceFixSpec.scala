@@ -20,10 +20,17 @@ class AdviceFixSpec extends SparkSpec {
   }
 
   test("events.ts keeps exact microseconds (no double round-trip)") {
-    // end-to-end: the loaded events table must agree with integral ns/1000
-    val raw = spark.read.parquet(s"$sf/events.parquet")
-    assume(raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-    val mismatches = Tables.events(spark, sf).select(col("event_id"), col("ts"))
+    import spark.implicits._
+    // end-to-end: the loaded events table must agree with integral
+    // ns/1000. The testdata stores ts as a timestamp now, so the test
+    // writes its own events.parquet in the LONG-nanosecond profile:
+    // 2024-epoch nanos, past double's 2^53 exact range
+    val dir = java.nio.file.Files.createTempDirectory("graft_events_ns").toString
+    (0L until 2000L).map(i => (i, 1704067199999999001L + i * 999999937L))
+      .toDF("event_id", "ts").write.parquet(s"$dir/events.parquet")
+    val raw = spark.read.parquet(s"$dir/events.parquet")
+    assert(raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val mismatches = Tables.events(spark, dir).select(col("event_id"), col("ts"))
       .join(raw.select(col("event_id"), col("ts").as("ns")), "event_id")
       .filter(unix_micros(col("ts")) =!= call_function("div", col("ns"), lit(1000L)))
       .count()

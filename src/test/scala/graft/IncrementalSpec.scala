@@ -43,7 +43,7 @@ class IncrementalSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_state3").toString
     // compactEvery=1: every batch immediately compacts, so the SECOND
     // delivery of id 0 arrives after its delta name left the manifest —
-    // the _COMMITTED ledger must still dedupe it
+    // the store's tag ledger (its `#tag:b0` line) must still dedupe it
     val c = new IncrementalCruncher(spark, dir, compactEvery = 1)
     val li = Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus")
@@ -52,6 +52,29 @@ class IncrementalSpec extends SparkSpec {
     c.mergeBatch(li.filter(col("l_orderkey") % 2 =!= 0), 1L)
     c.mergeBatch(li.filter(col("l_orderkey") % 2 === 0), 0L) // late re-delivery
     assert(c.committedBatches == Set(0L, 1L))
+    val got = c.result().get.collect().map(_.mkString("|")).toSet
+    val oneShot = Merge.finish(Merge.merge(Seq(Merge.pointAgg(li))))
+      .collect().map(_.mkString("|")).toSet
+    assert(got == oneShot)
+  }
+
+  test("a batch already committed through the store's tag ledger is a no-op") {
+    val dir = Files.createTempDirectory("graft_state5").toString
+    var observed = Vector.empty[(Long, Long)]
+    val c = new IncrementalCruncher(spark, dir,
+      onCommit = (id, v) => observed :+= ((id, v)))
+    val li = Tables.lineitem(spark, sf)
+      .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus")
+    // b0 commits straight through the store, as a crash between the
+    // manifest flip and the notify leaves it
+    val store = new graft.sources.PointStore(spark, dir,
+      keys = Seq("game_mode", "role"),
+      sums = Seq("played", "wins", "time_spent_d", "gold_d"),
+      maxes = Seq("last_match"))
+    assert(store.appendTagged("b0", Merge.pointAgg(li)))
+    c.mergeBatch(li, 0L)
+    assert(observed.isEmpty)
+    assert(c.committedBatches == Set(0L))
     val got = c.result().get.collect().map(_.mkString("|")).toSet
     val oneShot = Merge.finish(Merge.merge(Seq(Merge.pointAgg(li))))
       .collect().map(_.mkString("|")).toSet

@@ -558,10 +558,9 @@ class PointStoreSpec extends SparkSpec {
     assert(store.snapshotSchema == store.snapshot.schema)
   }
 
-  test("under the legacy member read, snapshotSchema is the schema of the " +
-      "snapshot's coercing union of type-widened members") {
+  test("type-widened decimal members read at the wider type by default") {
     import spark.implicits._
-    val dir = freshDir("legacyschema")
+    val dir = freshDir("widened")
     val store = new PointStore(spark, dir, keys = Seq("k"), sums = Seq("d"),
       maxes = Nil)
     def part(k: String, t: String) = Seq((k, BigDecimal("1.50"))).toDF("k", "d")
@@ -569,12 +568,58 @@ class PointStoreSpec extends SparkSpec {
     // the sums settle at decimal(30,2) and decimal(38,2)
     store.appendTagged("t0", part("a", "decimal(20,2)"))
     store.appendTagged("t1", part("b", "decimal(38,2)"))
-    intercept[IllegalArgumentException](store.snapshotSchema)
-    spark.conf.set("spark.graft.store.memberRead", "legacy")
-    try {
-      assert(store.snapshotSchema == store.snapshot.schema)
-      assert(store.snapshotSchema("d").dataType.sql == "DECIMAL(38,2)")
-    } finally spark.conf.unset("spark.graft.store.memberRead")
+    store.appendTagged("t2", part("a", "decimal(20,2)"))
+    assert(store.snapshotSchema == store.snapshot.schema)
+    assert(store.snapshotSchema("d").dataType.sql == "DECIMAL(38,2)")
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
+    val before = spark.conf.get(vectorized)
+    for (on <- Seq("true", "false")) {
+      spark.conf.set(vectorized, on)
+      try assert(store.snapshot.collect().map(r =>
+          r.getString(0) -> r.getDecimal(1).toPlainString).toMap ==
+        Map("a" -> "3.00", "b" -> "1.50"), s"vectorized reader $on")
+      finally spark.conf.set(vectorized, before)
+    }
+  }
+
+  test("a compaction between decimal(20,2) appends reads back the one-shot sum") {
+    import spark.implicits._
+    val dir = freshDir("deccompact")
+    val store = new PointStore(spark, dir, keys = Seq("k"), sums = Seq("d"),
+      maxes = Nil)
+    val batches = Seq(Seq("a" -> "1.25", "b" -> "2.50"), Seq("a" -> "0.75"),
+      Seq("b" -> "10.05", "c" -> "3.10"))
+    def frame(rows: Seq[(String, String)]) = rows.toDF("k", "d")
+      .withColumn("d", col("d").cast("decimal(20,2)"))
+    def decimals(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getString(0) -> r.getDecimal(1).toPlainString).toMap
+    // delta-t0 and delta-t1 hold decimal(30,2); the compacted base re-sums
+    // them to decimal(38,2), beside delta-t2 at decimal(30,2) again
+    store.appendTagged("t0", frame(batches(0)))
+    store.appendTagged("t1", frame(batches(1)))
+    store.compact()
+    store.appendTagged("t2", frame(batches(2)))
+    assert(decimals(store.snapshot) ==
+      decimals(frame(batches.flatten).groupBy("k").agg(sum("d"))))
+  }
+
+  test("a member type change the parquet reader cannot widen fails loudly") {
+    import spark.implicits._
+    val dir = freshDir("unwidenable")
+    val store = new PointStore(spark, dir, keys = Seq("k"), sums = Nil,
+      maxes = Seq("n"))
+    // int then long widens to long...
+    store.appendTagged("t0", Seq(("a", 1)).toDF("k", "n"))
+    store.appendTagged("t1", Seq(("b", 5L)).toDF("k", "n"))
+    assert(store.snapshot.schema("n").dataType.sql == "BIGINT")
+    assert(store.snapshot.collect().map(r => r.getString(0) -> r.getLong(1))
+      .toMap == Map("a" -> 1L, "b" -> 5L))
+    // ...but no reader turns a string into a long
+    store.appendTagged("t2", Seq(("c", "x")).toDF("k", "n"))
+    val e = intercept[IllegalArgumentException](store.snapshot)
+    assert(e.getMessage.contains("member 'delta-t2'") &&
+      e.getMessage.contains("column 'n' as STRING") &&
+      e.getMessage.contains("earlier member holds BIGINT"), e.getMessage)
   }
 
   test("ledger-only empty delta: version bumps, tag consumed, no member, " +

@@ -349,44 +349,52 @@ class ServerSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_wface").toString
-    val store = new graft.sources.PointStore(spark, s"$root/wf",
-      keys = Seq("k"), sums = Seq("played", "time_spent_d"), maxes = Nil)
     // decimal(38,2) is the width a summed decimal settles at (the
-    // benchmark's player store holds the same)
-    store.appendTagged("b0", Seq(("a", 1L, BigDecimal("1.50")))
-      .toDF("k", "played", "time_spent_d")
-      .withColumn("time_spent_d", col("time_spent_d").cast("decimal(38,2)")))
-    def rows = store.snapshot.collect().map(r =>
-      r.getString(0) -> ((r.getLong(1), r.getDecimal(2).toPlainString))).toMap
+    // benchmark's player store holds the same); a decimal(20,2) seed
+    // sums to decimal(30,2), and the first served write commits
+    // decimal(38,2) beside it
+    val stores = Seq("wf" -> "decimal(38,2)", "wf20" -> "decimal(20,2)").map {
+      case (name, seedType) =>
+        val store = new graft.sources.PointStore(spark, s"$root/$name",
+          keys = Seq("k"), sums = Seq("played", "time_spent_d"), maxes = Nil)
+        store.appendTagged("b0", Seq(("a", 1L, BigDecimal("1.50")))
+          .toDF("k", "played", "time_spent_d")
+          .withColumn("time_spent_d", col("time_spent_d").cast(seedType)))
+        name -> store
+    }
     val srv = new QueryServer(spark, sf, storeRoot = Some(root))
     srv.start()
     try {
       val port = srv.boundPort
-      def ingest(tag: String, body: String) =
-        post(port, s"/ingest/point?store=wf&tag=$tag", body)
-      // a line holding a JSON array is a batch of rows, one per element
-      val (ac, ab) = ingest("arr",
-        """[{"k":"a","played":2,"time_spent_d":0.25},{"k":"b","played":3,"time_spent_d":4.10}]""")
-      assert(ac == 200 && ab.contains("\"committed\":true"), ab)
-      // a decimal measure sent as an integer coerces exactly
-      val (ic, ib) = ingest("int", """{"k":"c","played":1,"time_spent_d":7}""")
-      assert(ic == 200 && ib.contains("\"committed\":true"), ib)
-      val folded = Map("a" -> ((3L, "1.75")), "b" -> ((3L, "4.10")),
-        "c" -> ((1L, "7.00")))
-      assert(rows == folded)
-      // one malformed line among good ones refuses the whole body
-      val (mc, mb) = ingest("mal",
-        "{\"k\":\"d\",\"played\":1}\n{\"k\": oops\n{\"k\":\"e\",\"played\":1}")
-      assert(mc == 400 && mb.contains("schema coercion"), s"$mc $mb")
-      // field names are case-sensitive: `Played` is not `played`
-      val (pc, pb) = ingest("case", """{"k":"a","Played":5}""")
-      assert(pc == 400 && pb.contains("unknown field(s) Played"), s"$pc $pb")
-      // a null key has no grain to fold into
-      val (nc, nb) = ingest("nul", """{"k":null,"played":1}""")
-      assert(nc == 400 && nb.contains("non-null key(s) k"), s"$nc $nb")
-      // none of the refused bodies committed or consumed its tag
-      assert(rows == folded)
-      assert(store.consumedTags == Set("b0", "arr", "int"))
+      for ((name, store) <- stores) {
+        def rows = store.snapshot.collect().map(r =>
+          r.getString(0) -> ((r.getLong(1), r.getDecimal(2).toPlainString))).toMap
+        def ingest(tag: String, body: String) =
+          post(port, s"/ingest/point?store=$name&tag=$tag", body)
+        // a line holding a JSON array is a batch of rows, one per element
+        val (ac, ab) = ingest("arr",
+          """[{"k":"a","played":2,"time_spent_d":0.25},{"k":"b","played":3,"time_spent_d":4.10}]""")
+        assert(ac == 200 && ab.contains("\"committed\":true"), s"$name $ab")
+        // a decimal measure sent as an integer coerces exactly
+        val (ic, ib) = ingest("int", """{"k":"c","played":1,"time_spent_d":7}""")
+        assert(ic == 200 && ib.contains("\"committed\":true"), s"$name $ib")
+        val folded = Map("a" -> ((3L, "1.75")), "b" -> ((3L, "4.10")),
+          "c" -> ((1L, "7.00")))
+        assert(rows == folded, name)
+        // one malformed line among good ones refuses the whole body
+        val (mc, mb) = ingest("mal",
+          "{\"k\":\"d\",\"played\":1}\n{\"k\": oops\n{\"k\":\"e\",\"played\":1}")
+        assert(mc == 400 && mb.contains("schema coercion"), s"$name $mc $mb")
+        // field names are case-sensitive: `Played` is not `played`
+        val (pc, pb) = ingest("case", """{"k":"a","Played":5}""")
+        assert(pc == 400 && pb.contains("unknown field(s) Played"), s"$name $pc $pb")
+        // a null key has no grain to fold into
+        val (nc, nb) = ingest("nul", """{"k":null,"played":1}""")
+        assert(nc == 400 && nb.contains("non-null key(s) k"), s"$name $nc $nb")
+        // none of the refused bodies committed or consumed its tag
+        assert(rows == folded, name)
+        assert(store.consumedTags == Set("b0", "arr", "int"), name)
+      }
     } finally srv.stop()
   }
 
