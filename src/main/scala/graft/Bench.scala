@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -76,9 +77,11 @@ object Bench {
     // mercy of transient host contention (BENCH_r03/r04 each carried a
     // 10×+ spike on code that measured flat when re-run alone); the min
     // of 2 discards one-off noise while still charging every real cost —
-    // plan analysis, codegen, shuffle, scan — on each rep (nothing is
-    // cached across reps except the JVM/JIT warmth a steady-state
-    // deployment has anyway).
+    // plan analysis, shuffle, scan — on each rep. Cached across reps is
+    // what a steady-state deployment has anyway: JVM/JIT warmth and the
+    // compiled generated classes (Spark's codegen cache, which
+    // GraftExtensions sizes to hold the query surface's classes; the
+    // per-query "compiles" count shows any class a rep recompiled).
     // Default 3 since r7: three rounds running (r3, r4, r6) BOTH reps of
     // a query landed inside one host-contention window, poisoning the
     // official artifact; a third rep makes that coincidence much rarer,
@@ -107,6 +110,9 @@ object Bench {
     // drift-flags the first query of every session
     (1 to 3).foreach(_ => probeOnce(spark, nCpus))
 
+    // generated classes compiled so far in this JVM
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     def timedRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Long) = {
       val t0 = System.nanoTime()
@@ -134,7 +140,9 @@ object Bench {
       // lifecycle entries stay cold — they mutate real store state, a
       // warmup would double-run the verb
       if (qreps > 1) timedRun(fn)
+      val c0 = compiles()
       val runs = (1 to qreps).map(_ => timedRun(fn))
+      val nCompiled = compiles() - c0
       probes += probeSlot(spark, nCpus)
       // min over SUCCESSFUL reps: a transiently-failed rep must not
       // contribute its (fast, bogus) time; rows=-1 only if every rep died
@@ -146,11 +154,11 @@ object Bench {
       // were turbulent when it ran
       val times = (if (ok.nonEmpty) ok else runs).map(_._1)
       val contaminated = times.max / times.min.max(1e-9) > 3.0
-      System.err.println(f"[bench] $name%-20s $sec%8.2fs rows=$n" +
+      System.err.println(f"[bench] $name%-20s $sec%8.2fs rows=$n compiles=$nCompiled" +
         runs.map(r => f"${r._1}%.2f").mkString(" (reps: ", " ", ")") +
         (if (qreps == 1 && reps > 1) "  LIFECYCLE(1 rep)" else "") +
         (if (contaminated) "  CONTAMINATED" else ""))
-      (name, sec, contaminated)
+      (name, sec, contaminated, nCompiled)
     }
     // drift pass: the probe series says which query WINDOWS were
     // contended, independently of rep spread — exactly the signal the
@@ -166,7 +174,7 @@ object Bench {
     // bracket query i) and make the published median differ from the
     // one that produced the flags
     val retryProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val results = measured.zipWithIndex.map { case ((name, sec, cont), i) =>
+    val results = measured.zipWithIndex.map { case ((name, sec, cont, _), i) =>
       if (mainFlags(i) && SparkEntry.lifecycleQueries(name)) {
         val pBefore = probeSlot(spark, nCpus)
         val (rSec, rN) = timedRun(SparkEntry.queries(name))
@@ -195,6 +203,10 @@ object Bench {
     }
     val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // generated classes compiled during each query's timed reps: 0 once
+    // its warmup rep has filled the codegen cache
+    val compiled = measured.map { case (k, _, _, c) => s"\"" + k + "\":" + c }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val contaminatedQs = results.collect { case (k, _, true, _, _) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
@@ -204,7 +216,7 @@ object Bench {
       .mkString("[", ",", "]")
     val probeSeries = probes.map(p => f"$p%.4f").mkString("[", ",", "]")
     val retrySeries = retryProbes.map(p => f"$p%.4f").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"contaminated":$contaminatedQs,"drift_flagged":$driftQs,"drift_retried":$retriedQs,"probe_median":${f"${Drift.median(probes.toIndexedSeq)}%.4f"},"probes":$probeSeries,"retry_probes":$retrySeries,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"compiles":$compiled,"contaminated":$contaminatedQs,"drift_flagged":$driftQs,"drift_retried":$retriedQs,"probe_median":${f"${Drift.median(probes.toIndexedSeq)}%.4f"},"probes":$probeSeries,"retry_probes":$retrySeries,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

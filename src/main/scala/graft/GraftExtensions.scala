@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{CosineSimilarity, DotProduct}
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -15,6 +16,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   graft_dot(a, b)    — Σ aᵢbᵢ over two array<double>
   *   graft_cosine(a, b) — graft_dot(a,b) / (‖a‖·‖b‖), composed from
   *                        catalyst arithmetic around the same expression
+  *
+  * It also sizes Spark's generated-class cache for graft's query surface
+  * (see [[GraftExtensions.sizeCodegenCache]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -25,6 +29,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     CosineSimilarity(children(0), children(1)) // fused: one loop, 3 accumulators
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // extensions apply after the SparkContext exists and before the
+    // session's shared state copies its conf
+    Option(SparkEnv.get).foreach(env => GraftExtensions.sizeCodegenCache(env.conf))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
@@ -134,4 +141,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator custom plan: logical AsofJoin → AsofJoinExec
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.AsofJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Generated classes kept compiled. One pass over the 10 reference
+    * crunch queries needs 200-400 distinct classes: at Spark's default of
+    * 100 a pass recompiled 173-250 of them (3.4 s of a 16 s pass at
+    * sf0.002, 4 vCPUs), at 400 none. 1000 leaves room for the rest of the
+    * surface; each entry is one small class. */
+  val CodegenCacheEntries = 1000
+
+  /** Spark fixes the cache size when its code generator is first used, so
+    * this must reach the SparkContext's conf before any query compiles.
+    * An explicit setting wins. */
+  def sizeCodegenCache(conf: SparkConf): Unit =
+    conf.setIfMissing(CodegenCacheKey, CodegenCacheEntries.toString)
 }

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.hadoop.fs.Path
+import java.util.concurrent.ConcurrentHashMap
 
 /** Parquet star-schema loaders (TESTDATA.md) plus shared numeric helpers.
   *
@@ -14,8 +16,77 @@ import org.apache.spark.sql.types.DecimalType
   * nicety.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh relation over `<dir>/<name>.parquet`. The schema is resolved
+    * once per (session, path) and reused while the file's status (length
+    * and mtime, or a directory's leaf listing) and the session's
+    * parquet-inference confs are unchanged: a bare `spark.read.parquet`
+    * infers it from the parquet footers, in a one-task Spark job, on every
+    * call, which every query build paid once per table it loads. Each call
+    * still plans its own relation, with new attribute ids, so two loads of
+    * one table join as two independent sides. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    statusOf(spark, path) match {
+      // a missing path: the reader reports it in its own terms
+      case None => spark.read.parquet(path)
+      case Some(stamp) =>
+        val confs = InferenceConfs.map(spark.conf.getOption)
+        val memo = resolved.synchronized {
+          resolved.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Resolved]())
+        }
+        memo.get(path) match {
+          case Resolved(`confs`, `stamp`, schema) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            memo.put(path, Resolved(confs, stamp, df.schema))
+            df
+        }
+    }
+  }
+
+  /** The schema [[load]] holds for `path` in this session, if any. */
+  private[graft] def memoizedSchema(spark: SparkSession, path: String): Option[StructType] =
+    resolved.synchronized(Option(resolved.get(spark)))
+      .flatMap(m => Option(m.get(path))).map(_.schema)
+
+  /** Session confs that parquet schema inference reads. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles")
+
+  private final case class Resolved(confs: Seq[Option[String]],
+                                    stamp: Seq[(String, Long, Long)],
+                                    schema: StructType)
+
+  /** Per session (weakly held, so a stopped session's entries go with it). */
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Resolved]]()
+
+  /** (path, length, mtime) of the file, or of every leaf under a
+    * directory; None when nothing is there. */
+  private def statusOf(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val found = try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    found.map { st =>
+      if (st.isFile) Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      else {
+        val leaves = fs.listFiles(p, true)
+        val out = Seq.newBuilder[(String, Long, Long)]
+        while (leaves.hasNext) {
+          val f = leaves.next()
+          out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        out.result().sorted
+      }
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")

@@ -88,8 +88,7 @@ final class ChangefeedFollower(spark: SparkSession, upstream: PointStore,
   }
 
   /** Merge-on-read view of the derived table (None before first fold). */
-  def result: Option[DataFrame] =
-    if (store.members.isEmpty) None else Some(store.snapshot)
+  def result: Option[DataFrame] = store.snapshotIfAny
 }
 
 object ChangefeedFollower {

@@ -75,12 +75,18 @@ import org.apache.spark.sql.types._
   *   exact regime (k ≥ cardinality anywhere a partial is built) the
   *   folded ranking is bit-identical to a one-shot GROUP BY.
   */
-final class PointStore(spark: SparkSession, path: String,
+final class PointStore private (spark: SparkSession, path: String,
                        val keys: Seq[String], sums: Seq[String],
-                       maxes: Seq[String], sketches: Seq[String] = Nil,
-                       quantiles: Seq[String] = Nil,
-                       mins: Seq[String] = Nil,
-                       topks: Seq[String] = Nil) {
+                       maxes: Seq[String], sketches: Seq[String],
+                       quantiles: Seq[String], mins: Seq[String],
+                       topks: Seq[String], opened: Option[PointStore.Manifest]) {
+
+  def this(spark: SparkSession, path: String, keys: Seq[String],
+           sums: Seq[String], maxes: Seq[String], sketches: Seq[String] = Nil,
+           quantiles: Seq[String] = Nil, mins: Seq[String] = Nil,
+           topks: Seq[String] = Nil) =
+    this(spark, path, keys, sums, maxes, sketches, quantiles, mins, topks, None)
+
   require(keys.nonEmpty &&
     (sums.nonEmpty || maxes.nonEmpty || sketches.nonEmpty ||
       quantiles.nonEmpty || mins.nonEmpty || topks.nonEmpty),
@@ -126,7 +132,8 @@ final class PointStore(spark: SparkSession, path: String,
     * none and stay readable — their first new commit records one). */
   def storedSchema: Option[Map[String, Seq[String]]] = readManifest().schema
 
-  storedSchema.foreach { st =>
+  // [[PointStore.open]] hands over the manifest it read the layout from
+  opened.getOrElse(readManifest()).schema.foreach { st =>
     require(st.getOrElse("keys", Nil) == keys,
       s"point store at $path is keyed (${st.getOrElse("keys", Nil).mkString(",")}) " +
         s"but this handle declares (${keys.mkString(",")}) — the key tuple " +
@@ -408,6 +415,13 @@ final class PointStore(spark: SparkSession, path: String,
     * list or compact first); keys cannot evolve (they define the
     * grain). */
   def snapshot: DataFrame = snapshotOf(readManifest())
+
+  /** [[snapshot]], or None while the store has no member — one manifest
+    * read for both. */
+  def snapshotIfAny: Option[DataFrame] = {
+    val m = readManifest()
+    if (m.members.isEmpty) None else Some(snapshotOf(m))
+  }
 
   private def snapshotOf(m: Manifest): DataFrame =
     mergeAgg(readMembers(liveMembers(m)))
@@ -720,7 +734,7 @@ object PointStore {
           "layout once; its next commit records the schema"))
     def cls(c: String) = schema.getOrElse(c, Nil)
     new PointStore(spark, path, cls("keys"), cls("sums"), cls("maxes"),
-      cls("sketches"), cls("quantiles"), cls("mins"), cls("topks"))
+      cls("sketches"), cls("quantiles"), cls("mins"), cls("topks"), Some(m))
   }
 
   private[graft] def deleteRec(f: java.io.File): Unit = {

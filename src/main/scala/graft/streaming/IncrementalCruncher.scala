@@ -53,8 +53,7 @@ final class IncrementalCruncher(spark: SparkSession, stateDir: String,
     store.consumedTags.collect { case BatchTag(id) => id.toLong }
 
   /** The live point table (None before the first batch). */
-  def pointTable(): Option[DataFrame] =
-    if (store.members.isEmpty) None else Some(store.snapshot)
+  def pointTable(): Option[DataFrame] = store.snapshotIfAny
 
   /** Fold one batch of fact rows into the point table; re-deliveries of
     * an already-committed batch id are no-ops. Compaction leaves the
