@@ -1133,7 +1133,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
     if (new File(dir, "_MANIFEST").exists && !cfgFile.exists)
       fail(409, s"store '$name' exists but carries no ingest config — it is " +
         "maintained by a library lifecycle (its checkpoint lives with that " +
-        "driver; a fresh one here would double-count); fold through the " +
+        "lifecycle; a fresh one here would double-count); fold through the " +
         "lifecycle or ingest into a fresh store name")
     if (cfgFile.exists) {
       val stored = read(cfgFile)
