@@ -481,22 +481,40 @@ object Windows {
     broadcast(customer(s, d).select(col("c_custkey").as("user_id"),
       col("c_mktsegment").as("seg")))
 
+  /** The entry payload [[funnelOf]]'s `by` carries for the attached
+    * attribute columns `cols`: one struct with a field per attribute,
+    * so every arity rides the same min-over-(ts, payload) entry sample
+    * (lexicographic over the fields — deterministic under ties). */
+  def segPayload(cols: Seq[String]): Column =
+    struct(cols.map(c => col(c).as(c)): _*)
+
   /** The segmented per-step report assembly — ONE shape shared by
     * every segmented funnel flavor (chained, windowed, per-visit,
-    * deepest) and by GET /funnel&by=: per stage, a `rollup` over the
-    * reach frame's `_seg` payload (two grouping sets — the segment
-    * rows and the "all" member, recomputed so distinct measures stay
-    * exact), projected to (segment, step, step_name, measures).
-    * Expand multiplies reach-grain partials, never raw events. */
+    * deepest; one axis or several) and by GET /funnel&by=: per stage,
+    * GROUPING SETS over the reach frame's [[segPayload]] fields with an
+    * "all" member on every axis (2^N sets, the measures recomputed per
+    * set so distinct counts stay exact), projected to (the axes' report
+    * names, step, step_name, measures). `by` maps each payload
+    * attribute to its report name. Expand multiplies reach-grain
+    * partials, never raw events. */
   def segmentedFunnelReport(stages: Seq[DataFrame], names: Seq[String],
-                            aggs: Seq[Column],
-                            outCols: Seq[String]): DataFrame =
+                            by: Seq[(String, String)], aggs: Seq[Column],
+                            outCols: Seq[String]): DataFrame = {
+    val axes = by.indices.map(j => s"_a$j")
     stages.zip(names).zipWithIndex.map { case ((df, name), i) =>
-      df.rollup(col("_seg")).agg(aggs.head, aggs.tail: _*)
-        .select(Seq(coalesce(col("_seg"), lit("all")).as("segment"),
-          lit(i + 1).cast("int").as("step"),
-          lit(name).as("step_name")) ++ outCols.map(col): _*)
+      df.select(col("*") +: by.zip(axes).map { case ((in, _), a) =>
+          col("_seg").getField(in).as(a) }: _*)
+        .groupingSets(segGroupingSets(Nil, axes), axes.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .select(by.zip(axes).map { case ((_, out), a) =>
+            coalesce(col(a), lit("all")).as(out) } ++
+          Seq(lit(i + 1).cast("int").as("step"),
+            lit(name).as("step_name")) ++ outCols.map(col): _*)
     }.reduce(_ unionByName _)
+  }
+
+  /** The registered one-axis mapping: attached column → report name. */
+  private val By1: Seq[(String, String)] = Seq("seg" -> "segment")
 
   /** `events_funnel_segmented`: the funnel report broken down BY
     * SEGMENT with an "all" rollup member — the first question an
@@ -512,8 +530,8 @@ object Windows {
     * `events_funnel` counts by construction. */
   def eventsFunnelSegmented(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).join(segmentDim(s, d), Seq("user_id"))
-    val stages = funnelOf(ev, FunnelSteps, by = Some(col("seg")))
-    segmentedFunnelReport(stages, FunnelSteps,
+    val stages = funnelOf(ev, FunnelSteps, by = Some(segPayload(Seq("seg"))))
+    segmentedFunnelReport(stages, FunnelSteps, By1,
       Seq(count(lit(1)).as("users")), Seq("users"))
   }
 
@@ -571,17 +589,10 @@ object Windows {
     * (all, all) members equal the unsegmented `events_funnel` counts
     * by construction. */
   def eventsFunnelSegmented2(s: SparkSession, d: String): DataFrame = {
-    val ev = events(s, d).join(segmentDim2(s, d), Seq("user_id"))
-    val stages = funnelOf(ev, FunnelSteps,
-      by = Some(struct(col("seg").as("s1"), col("region").as("s2"))))
-    stages.zip(FunnelSteps).zipWithIndex.map { case ((df, name), i) =>
-      df.select(col("_seg.s1").as("seg"), col("_seg.s2").as("region"))
-        .cube(col("seg"), col("region")).agg(count(lit(1)).as("users"))
-        .select(coalesce(col("seg"), lit("all")).as("segment"),
-          coalesce(col("region"), lit("all")).as("region"),
-          lit(i + 1).cast("int").as("step"), lit(name).as("step_name"),
-          col("users"))
-    }.reduce(_ unionByName _)
+    val stages = funnelOf(events2(s, d), FunnelSteps,
+      by = Some(segPayload(By2.map(_._1))))
+    segmentedFunnelReport(stages, FunnelSteps, By2,
+      Seq(count(lit(1)).as("users")), Seq("users"))
   }
 
   /** The staged SQL with both attributes riding each stage, expanded
@@ -627,8 +638,8 @@ object Windows {
   def eventsFunnelWindowedSegmented(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).join(segmentDim(s, d), Seq("user_id"))
     val stages = funnelOf(ev, FunnelSteps,
-      Some(parseHorizon(FunnelHorizon)), by = Some(col("seg")))
-    segmentedFunnelReport(stages, FunnelSteps,
+      Some(parseHorizon(FunnelHorizon)), by = Some(segPayload(Seq("seg"))))
+    segmentedFunnelReport(stages, FunnelSteps, By1,
       Seq(count(lit(1)).as("users")), Seq("users"))
   }
 
@@ -668,8 +679,9 @@ object Windows {
     * sums per-segment distincts. */
   def eventsFunnelSessionsSegmented(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).join(segmentDim(s, d), Seq("user_id"))
-    val stages = funnelSessionsOf(ev, FunnelSteps, by = Some(col("seg")))
-    segmentedFunnelReport(stages, FunnelSteps,
+    val stages = funnelSessionsOf(ev, FunnelSteps,
+      by = Some(segPayload(Seq("seg"))))
+    segmentedFunnelReport(stages, FunnelSteps, By1,
       Seq(countDistinct(col("user_id.u")).as("users"),
         count(lit(1)).as("visits")), Seq("users", "visits"))
   }
@@ -717,18 +729,10 @@ object Windows {
     * a sum of per-cell distincts). */
   def eventsFunnelSessionsSegmented2(s: SparkSession, d: String): DataFrame = {
     val stages = funnelSessionsOf(events2(s, d), FunnelSteps,
-      by = Some(struct(col("seg").as("s1"), col("region").as("s2"))))
-    stages.zip(FunnelSteps).zipWithIndex.map { case ((df, name), i) =>
-      df.select(col("user_id.u").as("u"), col("_seg.s1").as("seg"),
-          col("_seg.s2").as("region"))
-        .cube(col("seg"), col("region"))
-        .agg(countDistinct(col("u")).as("users"),
-          count(lit(1)).as("visits"))
-        .select(coalesce(col("seg"), lit("all")).as("segment"),
-          coalesce(col("region"), lit("all")).as("region"),
-          lit(i + 1).cast("int").as("step"), lit(name).as("step_name"),
-          col("users"), col("visits"))
-    }.reduce(_ unionByName _)
+      by = Some(segPayload(By2.map(_._1))))
+    segmentedFunnelReport(stages, FunnelSteps, By2,
+      Seq(countDistinct(col("user_id.u")).as("users"),
+        count(lit(1)).as("visits")), Seq("users", "visits"))
   }
 
   def eventsFunnelSessionsSegmented2Oracle: String = """
@@ -777,7 +781,7 @@ object Windows {
     * "all"-member expansion needs. The crunch_global_full discipline
     * (Crunch.scala's 2^5 is the registered cap for the pattern)
     * governs k; the registered queries use k ≤ 2. */
-  private def segGroupingSets(always: Seq[Column],
+  private[graft] def segGroupingSets(always: Seq[Column],
                               segs: Seq[String]): Seq[Seq[Column]] =
     (segs.size to 0 by -1).flatMap(n =>
       segs.combinations(n).map(c => always ++ c.map(col)))
@@ -1341,8 +1345,8 @@ object Windows {
   def eventsFunnelDeepestSegmented(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).join(segmentDim(s, d), Seq("user_id"))
     val stages = funnelDeepestOf(ev, FunnelSteps,
-      parseHorizon(FunnelHorizon), by = Some(col("seg")))
-    segmentedFunnelReport(stages, FunnelSteps,
+      parseHorizon(FunnelHorizon), by = Some(segPayload(Seq("seg"))))
+    segmentedFunnelReport(stages, FunnelSteps, By1,
       Seq(countDistinct(col("user_id")).as("users")), Seq("users"))
   }
 
@@ -1387,18 +1391,9 @@ object Windows {
     * grouping set over (user, anchor)-grain reaches. */
   def eventsFunnelDeepestSegmented2(s: SparkSession, d: String): DataFrame = {
     val stages = funnelDeepestOf(events2(s, d), FunnelSteps,
-      parseHorizon(FunnelHorizon),
-      by = Some(struct(col("seg").as("s1"), col("region").as("s2"))))
-    stages.zip(FunnelSteps).zipWithIndex.map { case ((df, name), i) =>
-      df.select(col("user_id"), col("_seg.s1").as("seg"),
-          col("_seg.s2").as("region"))
-        .cube(col("seg"), col("region"))
-        .agg(countDistinct(col("user_id")).as("users"))
-        .select(coalesce(col("seg"), lit("all")).as("segment"),
-          coalesce(col("region"), lit("all")).as("region"),
-          lit(i + 1).cast("int").as("step"), lit(name).as("step_name"),
-          col("users"))
-    }.reduce(_ unionByName _)
+      parseHorizon(FunnelHorizon), by = Some(segPayload(By2.map(_._1))))
+    segmentedFunnelReport(stages, FunnelSteps, By2,
+      Seq(countDistinct(col("user_id")).as("users")), Seq("users"))
   }
 
   def eventsFunnelDeepestSegmented2Oracle: String = """
@@ -1778,24 +1773,16 @@ object Windows {
         by.map(_._2).distinct.size == by.size,
       s"funnelLatencySegmentedOf: by must map distinct columns to " +
         s"distinct report names, got $by")
-    val payload = by match {
-      case Seq((n, _)) => col(n)
-      case bs => struct(bs.map(p => col(p._1).as(p._1)): _*)
-    }
-    // single axis keeps the bare `_seg` payload column (the registered
-    // single-segment plan, byte-identical); k axes extract the struct's
-    // fields once per hop before the grouping pass
-    val segNames = if (by.size == 1) Seq("_seg") else by.map(_._1)
-    val segSel: Seq[Column] =
-      if (by.size == 1) Seq(col("_seg"))
-      else by.map(p => col("_seg").getField(p._1).as(p._1))
-    val stages = funnelOf(ev, steps, by = Some(payload))
+    // the payload's fields are extracted once per hop before the
+    // grouping pass
+    val segNames = by.map(_._1)
+    val stages = funnelOf(ev, steps, by = Some(segPayload(segNames)))
     stages.sliding(2).toSeq.zipWithIndex.map { case (Seq(a, b), i) =>
       val hop = s"${steps(i)}->${steps(i + 1)}"
       a.select(col("user_id"), col("t").as("t_from"), col("_seg"))
         .join(b.select(col("user_id"), col("t").as("t_to")),
           Seq("user_id"))
-        .select(segSel :+
+        .select(segNames.map(n => col("_seg").getField(n).as(n)) :+
           (unix_micros(col("t_to").cast("timestamp")) -
             unix_micros(col("t_from").cast("timestamp"))).as("lat_us"): _*)
         .groupingSets(segGroupingSets(Nil, segNames),

@@ -189,9 +189,10 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
         case e: NumberFormatException => Reply(500, error(e.getClass.getSimpleName))
         case e: IllegalArgumentException =>
           val msg = Option(e.getMessage).getOrElse("bad request")
-          Reply(if (msg.contains("no point store")) 404 else 400, error(msg))
+          Reply(if (msg.contains("no point store")) 404 else 400,
+            error(unrooted(msg)))
         case e: IllegalStateException =>
-          Reply(409, error(Option(e.getMessage).getOrElse("write-locked")))
+          Reply(409, error(unrooted(Option(e.getMessage).getOrElse("write-locked"))))
         case NonFatal(e) => Reply(500, error(e.getClass.getSimpleName))
       }
     val bytes = reply.body.getBytes(UTF_8)
@@ -200,6 +201,15 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
     ex.getResponseBody.write(bytes)
     ex.close()
   }
+
+  /** `msg` with each configured root's path cut from the paths it names,
+    * so an error names the store under its root, never the server's
+    * filesystem layout. */
+  private def unrooted(msg: String): String =
+    Seq(storeRoot, indexRoot).flatten
+      .flatMap(r => Seq(new File(r).getCanonicalPath, new File(r).getAbsolutePath, r))
+      .distinct.sortBy(-_.length)
+      .foldLeft(msg)((m, r) => m.replace(r + File.separator, ""))
 
   private def ok(body: String): Reply = Reply(200, body)
 
@@ -311,9 +321,13 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       names
     }
 
+  /** `&by=` names → (attribute column, report column): one attribute
+    * reports as `segment`, several under their own names. */
+  private def byAxes(by: Seq[String]): Seq[(String, String)] =
+    if (by.size == 1) Seq(by.head -> "segment") else by.map(n => n -> n)
+
   /** The order columns `&by=` adds to a computed report. */
-  private def segOrder(by: Seq[String]): Seq[String] =
-    if (by.size >= 2) by else if (by.size == 1) Seq("segment") else Nil
+  private def segOrder(by: Seq[String]): Seq[String] = byAxes(by).map(_._2)
 
   private def segmentedEvents(sf: String, names: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
@@ -345,14 +359,12 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
   }
 
   /** A maintained report store's rows at its current version or
-    * `&version=`. The store's own columns pick the frame: a two-axis
-    * segmented store (`seg2`) or a one-axis one (`seg`) serves its
-    * per-segment rows plus the read-time "all" members; any other store
-    * serves `plain`. */
+    * `&version=`. A store keyed on segment axes (`seg`, `seg2`, …)
+    * serves `segmented` over those axes: its per-segment rows plus the
+    * read-time "all" members. Any other store serves `plain`. */
   private def maintained(req: Req, name: String, needed: Seq[String],
                          keys: Seq[String],
-                         two: DataFrame => DataFrame,
-                         one: DataFrame => DataFrame)(
+                         segmented: (DataFrame, Seq[String]) => DataFrame)(
                          plain: DataFrame => DataFrame): Reply = {
     val (_, dir) = child(stores, "store", name)
     val store = PointStore.open(spark, dir.getPath)
@@ -361,12 +373,10 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       fail(400, s"store '$name' is not a maintained report — missing " +
         s"column(s) ${missing.mkString(", ")}")
     val snap = req.long("version").fold(store.snapshot)(store.snapshotAt)
-    val (report, order) =
-      if (snap.columns.contains("seg2"))
-        (two(snap), keys ++ Seq("segment", "segment2"))
-      else if (snap.columns.contains("seg")) (one(snap), keys :+ "segment")
-      else (plain(snap), keys)
-    rows(report.orderBy(order.map(col): _*).limit(req.limit))
+    val axes = Maintained.segAxes(store.keys)
+    val report = if (axes.isEmpty) plain(snap) else segmented(snap, axes)
+    rows(report.orderBy((keys ++ axes.map(Maintained.reportAxis)).map(col): _*)
+      .limit(req.limit))
   }
 
   private def stepsOf(req: Req): Option[Seq[String]] =
@@ -430,7 +440,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
     * &by=&exclude=2:error&minval=2:20]: the ordered funnel over the events
     * table for any step path, or a maintained funnel store. */
   private def funnel(req: Req): Reply = {
-    import org.apache.spark.sql.functions.{coalesce, count, countDistinct, lit, struct}
+    import org.apache.spark.sql.functions.{count, countDistinct, lit}
     val steps = stepsOf(req)
     val limit = req.limit
     req.long("version")
@@ -447,8 +457,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
         "minval", "sf")) match {
       case Some(name) =>
         maintained(req, name, Seq("step", "step_name", "users"), Seq("step"),
-          Maintained.funnelSegmented2ReportFrom(spark, _),
-          Maintained.funnelSegmentedReportFrom(spark, _)) { snap =>
+          Maintained.funnelSegmentedReportFrom(spark, _, _)) { snap =>
           // a session store carries visits beside users
           if (snap.columns.contains("visits"))
             Maintained.funnelSessionsReportFrom(spark, snap)
@@ -472,13 +481,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
         val names = steps.getOrElse(Windows.FunnelSteps)
         val ev = if (by.isEmpty) graft.Tables.events(spark, sf)
                  else segmentedEvents(sf, by)
-        // one attribute rides bare, two ride one struct
-        val seg = by match {
-          case Nil => None
-          case Seq(n) => Some(col(n))
-          case ns => Some(struct(ns.zipWithIndex.map {
-            case (n, i) => col(n).as(s"s$i") }: _*))
-        }
+        val seg = if (by.isEmpty) None else Some(Windows.segPayload(by))
         val exclMap = excl.getOrElse(Map.empty)
         val stages = mode match {
           case "deepest" => Windows.funnelDeepestOf(ev, names, win.get,
@@ -499,19 +502,8 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
           case _ => (Seq(count(lit(1)).as("users")), Seq("users"))
         }
         val report =
-          if (by.size >= 2)
-            // cube over the payload fields, each member coalescing to 'all'
-            stages.zip(names).zipWithIndex.map { case ((df, name), i) =>
-              df.select(col("user_id") +: by.zipWithIndex.map {
-                  case (n, j) => col(s"_seg.s$j").as(n) }: _*)
-                .cube(by.map(col): _*)
-                .agg(aggs.head, aggs.tail: _*)
-                .select(by.map(n => coalesce(col(n), lit("all")).as(n)) ++
-                  Seq(lit(i + 1).cast("int").as("step"),
-                    lit(name).as("step_name")) ++ outs.map(col): _*)
-            }.reduce(_ unionByName _)
-          else if (by.size == 1)
-            Windows.segmentedFunnelReport(stages, names, aggs, outs)
+          if (by.nonEmpty)
+            Windows.segmentedFunnelReport(stages, names, byAxes(by), aggs, outs)
           else stages.zip(names).zipWithIndex.map { case ((df, name), i) =>
             df.agg(aggs.head, aggs.tail: _*)
               .select(lit(i + 1).cast("int").as("step") +:
@@ -532,17 +524,14 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       case Some(name) =>
         maintained(req, name, Seq("from_step", "to_step", "n"),
           Seq("from_step", "to_step"),
-          Maintained.pathsSegmented2ReportFrom(spark, _),
-          Maintained.pathsSegmentedReportFrom(spark, _))(
+          Maintained.pathsSegmentedReportFrom(spark, _, _))(
           _.select("from_step", "to_step", "n"))
       case None =>
         val sf = req.sf
         val matrix = by match {
           case Nil => Windows.pathTransitionsOf(graft.Tables.events(spark, sf), gap)
-          case Seq(b) => Windows.pathsSegmentedOf(
-            segmentedEvents(sf, by).withColumnRenamed(b, "seg"), gap)
-          case bs => Windows.pathsSegmentedOf(segmentedEvents(sf, bs), gap,
-            by = bs.map(n => n -> n))
+          case _ => Windows.pathsSegmentedOf(segmentedEvents(sf, by), gap,
+            by = byAxes(by))
         }
         rows(matrix.orderBy((Seq("from_step", "to_step") ++ segOrder(by))
           .map(col): _*).limit(limit))
@@ -570,21 +559,18 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       case Some(name) =>
         maintained(req, name, Seq("cohort", "offset", "users"),
           Seq("cohort", "offset"),
-          Maintained.retentionSegmented2ReportFrom(spark, _),
-          Maintained.retentionSegmentedReportFrom(spark, _))(
+          Maintained.retentionSegmentedReportFrom(spark, _, _))(
           _.select(graft.Tables.tstr(col("cohort")).as("cohort"),
             col("offset"), col("users")))
       case None =>
         val sf = req.sf
         val matrix = by match {
-          case Seq(b) => Windows.retentionSegmentedOf(
-            segmentedEvents(sf, by).withColumnRenamed(b, "seg"), period, tz)
-          case bs if bs.size >= 2 => Windows.retentionSegmentedOf(
-            segmentedEvents(sf, bs), period, tz, by = bs.map(n => n -> n))
-          case _ =>
+          case Nil =>
             val ev = graft.Tables.events(spark, sf)
             if (mode == "rolling") Windows.retentionRollingOf(ev, period, tz)
             else Windows.retentionOf(ev, period, tz)
+          case _ => Windows.retentionSegmentedOf(segmentedEvents(sf, by),
+            period, tz, by = byAxes(by))
         }
         rows(matrix.orderBy((Seq("cohort", "offset") ++ segOrder(by))
           .map(col): _*).limit(limit))
@@ -600,8 +586,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
     storeFace(req, Seq("by", "sf")) match {
       case Some(name) =>
         maintained(req, name, Seq("hop", "n_users", "sk"), Seq("hop"),
-          Maintained.latencySegmented2ReportFrom(spark, _),
-          Maintained.latencySegmentedReportFrom(spark, _))(
+          Maintained.latencySegmentedReportFrom(spark, _, _))(
           _.select(col("hop") +: col("n_users") +:
             graft.operators.TextOps.QuantilePoints.map { case (q, n) =>
               graft.functions.SketchOps.quantileAt(col("sk"), q).as(n) }: _*))
@@ -609,10 +594,8 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
         val sf = req.sf
         val report = by match {
           case Nil => Windows.funnelLatency(spark, sf)
-          case Seq(b) => Windows.funnelLatencySegmentedOf(
-            segmentedEvents(sf, by).withColumnRenamed(b, "seg"))
-          case bs => Windows.funnelLatencySegmentedOf(segmentedEvents(sf, bs),
-            by = bs.map(n => n -> n))
+          case _ => Windows.funnelLatencySegmentedOf(segmentedEvents(sf, by),
+            by = byAxes(by))
         }
         rows(report.orderBy(("hop" +: segOrder(by)).map(col): _*).limit(limit))
     }
@@ -936,7 +919,7 @@ final class QueryServer(spark: SparkSession, defaultSf: String, port: Int = 0,
       val v = req.long("version").getOrElse(store.version)
       ok(recipeJson(name, v, store.tagOf(v), store.recipeAt(v), store.deprecationOf(v)))
     } else {
-      val tag = req.need("tag")
+      val tag = req.tag
       val budget = req.long("budget")
       val dflt = req.double("default")
       val shard = req.long("shard")

@@ -385,16 +385,20 @@ final class PointStore private (spark: SparkSession, path: String,
   }
 
   /** Row count of a just-written parquet directory from its footers —
-    * driver-side metadata, no Spark job. */
+    * driver-side metadata, no Spark job. The read options are built
+    * from the session's conf: the one-argument `open` builds a fresh
+    * Hadoop `Configuration`, which re-parses the XML defaults on every
+    * commit. */
   private def parquetRowCount(dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(conf).listStatus(p)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map { f =>
         val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf))
+            .fromPath(f.getPath, conf), opts)
         try rdr.getRecordCount finally rdr.close()
       }.sum
   }

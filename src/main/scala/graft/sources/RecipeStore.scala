@@ -92,9 +92,9 @@ final class RecipeStore private (spark: SparkSession, val root: String) {
     * point — a crash between the member write and the flip leaves an
     * orphan file no reader ever sees, and the retry overwrites it. */
   def commit(tag: String, recipe: Recipe): Boolean = {
-    require(tag.nonEmpty && !tag.contains("\n") && !tag.contains(":"),
-      s"recipe commit tag '$tag' must be a non-empty single-line " +
-        "identifier without ':'")
+    require(tag.nonEmpty && !tag.exists(_ < ' ') && !tag.contains(":"),
+      s"recipe commit tag '$tag' must be a non-empty identifier without " +
+        "':' or control characters (U+0000-U+001F)")
     sfs.withWriterLease() {
       if (consumedTags(tag)) false
       else {

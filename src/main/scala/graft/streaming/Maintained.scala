@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.PointStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -88,6 +88,46 @@ object Maintained {
       schema.split(",").toSeq.map(_.trim.split(" ")(0))
   }
 
+  /** The segment axis columns, in order: axis k is `seg<k>` (the first
+    * one plain `seg`) on the wire and in the store, and reads as
+    * `segment<k>` in a report. A `<family>_segmented` type folds the
+    * first axis, `<family>_segmented<n>` the first n. */
+  private def axisNames(n: Int): Seq[String] =
+    (1 to n).map(k => if (k == 1) "seg" else s"seg$k")
+
+  /** The report column axis `a` reads as: `seg<k>` → `segment<k>`. */
+  def reportAxis(a: String): String = "segment" + a.stripPrefix("seg")
+
+  /** The segment axes among a store's or fold's columns. */
+  def segAxes(cols: Seq[String]): Seq[String] =
+    cols.filter(_.matches("seg[0-9]*"))
+
+  /** `<family>_segmented[<n>]` → (family, its axis columns). */
+  private object Segmented {
+    private val Type = "(.+)_segmented([0-9]*)".r
+    def unapply(typ: String): Option[(String, Seq[String])] = typ match {
+      case Type(family, n) =>
+        Some((family, axisNames(if (n.isEmpty) 1 else n.toInt)))
+      case _ => None
+    }
+  }
+
+  /** A segmented type's drop schema: one more STRING column per axis. */
+  private def wireSchema(axes: Seq[String]): String =
+    DefaultWireSchema + axes.map(a => s", $a STRING").mkString
+
+  /** The twin's input: `cols` plus the axis values as ONE ordered `seg`
+    * payload, so a single operator serves every arity. */
+  private def segmentedEvents(df: DataFrame, axes: Seq[String],
+                              cols: String*): DataFrame =
+    df.select(cols.map(col) :+ array(axes.map(col): _*).as("seg"): _*)
+
+  /** The store keys of a segmented fold's cells: the payload split back
+    * into one column per axis, then the report's own `grain`. */
+  private def axisKeys(axes: Seq[String], grain: String*) =
+    axes.zipWithIndex.map { case (a, i) => col("seg").getItem(i).as(a) } ++
+      grain.map(col)
+
   /** Report types a maintained store can hold, with their applicable
     * configuration: `windowMs` = the funnel conversion horizon
     * (REQUIRED for funnel_deepest — the search is anchored — optional
@@ -140,55 +180,38 @@ object Maintained {
             df.select(col("user_id"), col("ts"), col("event_type"))
               .as[StreamingFunnelDeepest.Ev], s"${h}ms", path).toDF,
           _.groupBy("step", "step_name").agg(count(lit(1)).as("users")))
-      case "funnel_deepest_segmented" =>
+      case Segmented("funnel_deepest", axes) =>
         no(period, "period"); no(gapMs, "gap")
         val h = windowMs.getOrElse(throw new IllegalArgumentException(
-          "funnel_deepest_segmented requires a window (the search is " +
-            "anchored)"))
+          s"$typ requires a window (the search is anchored)"))
         // the entry segment pins at the user's FIRST anchor (the only
         // sample point final at watermark — the converting anchor
         // isn't known until the depth stops growing), so the
-        // (seg, step) counts are additive and the "all" member is the
-        // same read-time rollup the chained segmented store uses
-        ReportFold(Seq("seg", "step", "step_name"), Seq("users"), Nil,
+        // (seg₁…segₙ, step) counts are additive and the "all" members
+        // are the same read-time rollup the chained segmented store uses
+        ReportFold(axes ++ Seq("step", "step_name"), Seq("users"), Nil,
           df => StreamingFunnelDeepestSegmented.funnel(s,
-            df.select(col("user_id"), col("ts"), col("event_type"),
-              col("seg")).as[StreamingFunnelDeepestSegmented.Ev],
+            segmentedEvents(df, axes, "user_id", "ts", "event_type")
+              .as[StreamingFunnelDeepestSegmented.Ev],
             s"${h}ms", path).toDF,
-          _.groupBy("seg", "step", "step_name")
+          _.groupBy(axisKeys(axes, "step", "step_name"): _*)
             .agg(count(lit(1)).as("users")),
-          schema = DefaultWireSchema + ", seg STRING")
-      case "funnel_segmented" =>
+          schema = wireSchema(axes))
+      case Segmented("funnel", axes) =>
         no(period, "period"); no(gapMs, "gap")
-        // one more STRING on the wire and one more key in the store:
-        // the twin fixes each user's ENTRY segment at their step-1
-        // fold, so the (seg, step) cell counts are additive and the
-        // "all" member is a read-time rollup (funnelSegmentedReportFrom)
-        ReportFold(Seq("seg", "step", "step_name"), Seq("users"), Nil,
+        // one more STRING on the wire and one more key in the store per
+        // axis: the twin fixes each user's ENTRY segment at their step-1
+        // fold (lexicographic tie law ≡ the batch struct min), so the
+        // (seg₁…segₙ, step) cell counts are additive and every "all"
+        // member is a read-time rollup (funnelSegmentedReportFrom)
+        ReportFold(axes ++ Seq("step", "step_name"), Seq("users"), Nil,
           df => StreamingFunnelSegmented.funnel(s,
-            df.select(col("user_id"), col("ts"), col("event_type"),
-              col("seg")).as[StreamingFunnelSegmented.Ev],
+            segmentedEvents(df, axes, "user_id", "ts", "event_type")
+              .as[StreamingFunnelSegmented.Ev],
             windowMs.map(ms => s"${ms}ms"), path).toDF,
-          _.groupBy("seg", "step", "step_name")
+          _.groupBy(axisKeys(axes, "step", "step_name"): _*)
             .agg(count(lit(1)).as("users")),
-          schema = DefaultWireSchema + ", seg STRING")
-      case "funnel_segmented2" =>
-        no(period, "period"); no(gapMs, "gap")
-        // TWO more STRINGs on the wire and two more keys in the store:
-        // the twin pins the user's entry (seg, seg2) PAIR at their
-        // step-1 fold (lexicographic tie law ≡ the batch struct min),
-        // so the (seg, seg2, step) cells are additive and BOTH "all"
-        // axes are funnelSegmented2ReportFrom's read-time 2^2 rollup
-        ReportFold(Seq("seg", "seg2", "step", "step_name"),
-          Seq("users"), Nil,
-          df => StreamingFunnelSegmented2.funnel(s,
-            df.select(col("user_id"), col("ts"), col("event_type"),
-              col("seg"), col("seg2"))
-              .as[StreamingFunnelSegmented2.Ev],
-            windowMs.map(ms => s"${ms}ms"), path).toDF,
-          _.groupBy("seg", "seg2", "step", "step_name")
-            .agg(count(lit(1)).as("users")),
-          schema = DefaultWireSchema + ", seg STRING, seg2 STRING")
+          schema = wireSchema(axes))
       case "funnel_sessions" =>
         no(period, "period"); no(windowMs, "window")
         val g = gapMs.getOrElse(throw new IllegalArgumentException(
@@ -212,37 +235,21 @@ object Maintained {
                  else StreamingRetention.rollingCells(s, evs(df), p)).toDF,
           cells => notSentinel(cells)
             .groupBy("cohort", "offset").agg(count(lit(1)).as("users")))
-      case "retention_segmented" =>
+      case Segmented("retention", axes) =>
         no(steps, "steps"); no(windowMs, "window"); no(gapMs, "gap")
-        // the entry segment pins WITH the cohort (same finality
-        // argument), so the (seg, cohort, offset) counts stay additive
-        // and the "all" member is retentionSegmentedReportFrom's
-        // read-time rollup
-        val p = period.getOrElse("week")
-        ReportFold(Seq("seg", "cohort", "offset"), Seq("users"), Nil,
+        // the entry segment pins WITH the cohort (min over (ts, seg₁…segₙ)
+        // tuples — the batch entry law, same finality argument), so the
+        // (seg₁…segₙ, cohort, offset) counts stay additive and the "all"
+        // members are retentionSegmentedReportFrom's read-time rollup
+        ReportFold(axes ++ Seq("cohort", "offset"), Seq("users"), Nil,
           df => StreamingRetentionSegmented.cells(s,
-            df.select(col("user_id"), col("ts"), col("seg"))
-              .as[StreamingRetentionSegmented.Ev], p).toDF,
+            segmentedEvents(df, axes, "user_id", "ts")
+              .as[StreamingRetentionSegmented.Ev],
+            period.getOrElse("week")).toDF,
           cells => notSentinel(cells)
-            .groupBy("seg", "cohort", "offset")
+            .groupBy(axisKeys(axes, "cohort", "offset"): _*)
             .agg(count(lit(1)).as("users")),
-          schema = DefaultWireSchema + ", seg STRING")
-      case "retention_segmented2" =>
-        no(steps, "steps"); no(windowMs, "window"); no(gapMs, "gap")
-        // the entry PAIR pins with the cohort (min over (ts, seg, seg2)
-        // triples — the batch tuple law), so (seg, seg2, cohort,
-        // offset) counts are additive and both "all" axes are
-        // retentionSegmented2ReportFrom's read-time 2^2 rollup
-        val p2 = period.getOrElse("week")
-        ReportFold(Seq("seg", "seg2", "cohort", "offset"), Seq("users"),
-          Nil,
-          df => StreamingRetentionSegmented2.cells(s,
-            df.select(col("user_id"), col("ts"), col("seg"), col("seg2"))
-              .as[StreamingRetentionSegmented2.Ev], p2).toDF,
-          cells => notSentinel(cells)
-            .groupBy("seg", "seg2", "cohort", "offset")
-            .agg(count(lit(1)).as("users")),
-          schema = DefaultWireSchema + ", seg STRING, seg2 STRING")
+          schema = wireSchema(axes))
       case "paths" =>
         no(steps, "steps"); no(windowMs, "window"); no(period, "period")
         ReportFold(Seq("from_step", "to_step"), Seq("n"), Nil,
@@ -252,33 +259,19 @@ object Maintained {
               .as[StreamingPaths.Ev], gapMs).toDF,
           cells => notSentinel(cells)
             .groupBy("from_step", "to_step").agg(count(lit(1)).as("n")))
-      case "paths_segmented" =>
+      case Segmented("paths", axes) =>
         no(steps, "steps"); no(windowMs, "window"); no(period, "period")
         // each pair carries its from-event's segment — no new finality
         // argument (the from event is final when its pair emits)
-        ReportFold(Seq("seg", "from_step", "to_step"), Seq("n"), Nil,
+        ReportFold(axes ++ Seq("from_step", "to_step"), Seq("n"), Nil,
           df => StreamingPathsSegmented.pairs(s,
-            df.select(col("user_id"), col("ts"),
-              col("event_id").as("seq"), col("event_type"), col("seg"))
+            segmentedEvents(df.withColumn("seq", col("event_id")), axes,
+              "user_id", "ts", "seq", "event_type")
               .as[StreamingPathsSegmented.Ev], gapMs).toDF,
           cells => notSentinel(cells)
-            .groupBy("seg", "from_step", "to_step")
+            .groupBy(axisKeys(axes, "from_step", "to_step"): _*)
             .agg(count(lit(1)).as("n")),
-          schema = DefaultWireSchema + ", seg STRING")
-      case "paths_segmented2" =>
-        no(steps, "steps"); no(windowMs, "window"); no(period, "period")
-        // both attributes of the FROM event ride the pair — still no
-        // new finality argument
-        ReportFold(Seq("seg", "seg2", "from_step", "to_step"), Seq("n"),
-          Nil,
-          df => StreamingPathsSegmented2.pairs(s,
-            df.select(col("user_id"), col("ts"),
-              col("event_id").as("seq"), col("event_type"), col("seg"),
-              col("seg2")).as[StreamingPathsSegmented2.Ev], gapMs).toDF,
-          cells => notSentinel(cells)
-            .groupBy("seg", "seg2", "from_step", "to_step")
-            .agg(count(lit(1)).as("n")),
-          schema = DefaultWireSchema + ", seg STRING, seg2 STRING")
+          schema = wireSchema(axes))
       case "latency" =>
         no(period, "period"); no(gapMs, "gap")
         import graft.functions.SketchOps
@@ -293,54 +286,31 @@ object Maintained {
             .groupBy("hop").agg(count(lit(1)).as("n_users"),
               SketchOps.quantileSketch(col("lat_us"),
                 graft.operators.TextOps.QuantileK).as("sk")))
-      case "latency_segmented" =>
+      case Segmented("latency", axes) =>
         no(period, "period"); no(gapMs, "gap")
         import graft.functions.SketchOps
         require(path.size >= 2,
-          s"latency_segmented needs at least two steps (a hop), got $path")
+          s"$typ needs at least two steps (a hop), got $path")
         val hops = array(path.sliding(2).map { case Seq(a, b) =>
           lit(s"$a->$b") }.toSeq: _*)
         // the segmented twin's reaches carry lat_us exactly like the
         // plain twin's (the fin vector holds the previous reach), so
         // the segmented hop-latency store is one additive fold at
-        // (seg, hop) grain with a mergeable sketch measure; the "all"
-        // member is latencySegmentedReportFrom's read-time rollup
-        // (counts sum, sketches merge)
-        ReportFold(Seq("seg", "hop"), Seq("n_users"), Seq("sk"),
+        // (seg₁…segₙ, hop) grain with a mergeable sketch measure; the
+        // "all" members are latencySegmentedReportFrom's read-time
+        // rollup (counts sum, sketches merge)
+        ReportFold(axes :+ "hop", Seq("n_users"), Seq("sk"),
           df => StreamingFunnelSegmented.funnel(s,
-            df.select(col("user_id"), col("ts"), col("event_type"),
-              col("seg")).as[StreamingFunnelSegmented.Ev],
+            segmentedEvents(df, axes, "user_id", "ts", "event_type")
+              .as[StreamingFunnelSegmented.Ev],
             windowMs.map(ms => s"${ms}ms"), path).toDF
             .filter(col("step") > 1),
           _.withColumn("hop", element_at(hops, col("step") - 1))
-            .groupBy("seg", "hop").agg(count(lit(1)).as("n_users"),
-              SketchOps.quantileSketch(col("lat_us"),
-                graft.operators.TextOps.QuantileK).as("sk")),
-          schema = DefaultWireSchema + ", seg STRING")
-      case "latency_segmented2" =>
-        no(period, "period"); no(gapMs, "gap")
-        import graft.functions.SketchOps
-        require(path.size >= 2,
-          s"latency_segmented2 needs at least two steps (a hop), got $path")
-        val hops2 = array(path.sliding(2).map { case Seq(a, b) =>
-          lit(s"$a->$b") }.toSeq: _*)
-        // the two-axis twin's reaches carry lat_us exactly like the
-        // single-axis twin's; the store folds (seg, seg2, hop) sketches
-        // and both read-time "all" axes MERGE them (counts sum,
-        // sketches merge — exact regime ≡ quantile_disc)
-        ReportFold(Seq("seg", "seg2", "hop"), Seq("n_users"), Seq("sk"),
-          df => StreamingFunnelSegmented2.funnel(s,
-            df.select(col("user_id"), col("ts"), col("event_type"),
-              col("seg"), col("seg2"))
-              .as[StreamingFunnelSegmented2.Ev],
-            windowMs.map(ms => s"${ms}ms"), path).toDF
-            .filter(col("step") > 1),
-          _.withColumn("hop", element_at(hops2, col("step") - 1))
-            .groupBy("seg", "seg2", "hop")
+            .groupBy(axisKeys(axes, "hop"): _*)
             .agg(count(lit(1)).as("n_users"),
               SketchOps.quantileSketch(col("lat_us"),
                 graft.operators.TextOps.QuantileK).as("sk")),
-          schema = DefaultWireSchema + ", seg STRING, seg2 STRING")
+          schema = wireSchema(axes))
     }
   }
 
@@ -471,57 +441,49 @@ object Maintained {
     * drops are the upstream exporter's output, not the maintenance
     * loop any entry measures — warm them untimed so the first
     * maintained entry doesn't pay the one-time export. */
-  def warmLifecycleFixture(s: SparkSession, d: String): Unit = {
-    nightsFixture(s, d)
-    // the segmented and two-axis night exports are the same fixture
-    // doctrine as the plain one (immutable upstream INPUTS, hardlinked
-    // into each lifecycle's own watched dir) — warm all three, so the
+  def warmLifecycleFixture(s: SparkSession, d: String): Unit =
+    // the segmented night exports are the same fixture doctrine as the
+    // plain one (immutable upstream INPUTS, hardlinked into each
+    // lifecycle's own watched dir) — warm every arity, so the
     // alphabetically-first segmented entry doesn't pay the one-time
     // export the plain entries never paid (r20: it was paying ~1-2 s
     // of broadcast-dim export inside its timed region)
-    nightsFixtureOf(s, d, seg = true)
-    nightsFixtureOf(s, d, seg = true, seg2 = true)
-  }
+    Seq(0, 1, 2).foreach(n => nightsFixtureOf(s, d, axisNames(n)))
 
   private def nightsFixture(s: SparkSession, d: String): java.io.File =
-    nightsFixtureOf(s, d, seg = false)
+    nightsFixtureOf(s, d, Nil)
 
   /** Measurement hook (graft.ProfMaint): the staged plain-night drops. */
   private[graft] def stagedDropsDirFor(s: SparkSession, d: String): java.io.File =
     nightsFixture(s, d)
 
-  /** `seg = true` stages the SEGMENTED variant: the same tertile
-    * nights with the customer's market segment riding each event (the
-    * funnel_segmented wire shape — one broadcast dim join at export
-    * time; sentinels carry an empty segment, they are never folded).
-    * `seg2 = true` additionally rides the customer's nation (the
-    * funnel_segmented2 wire shape — the nation joins DIM-side before
-    * the one broadcast, the segmentDim2 discipline). */
+  /** The customer attribute each lifecycle axis rides: the market
+    * segment, then the customer's nation. */
+  private val FixtureAxes = Map("seg" -> "c_mktsegment", "seg2" -> "n_name")
+
+  /** Non-empty `axes` stage the SEGMENTED variant: the same tertile
+    * nights with the customer's attributes riding each event (the
+    * `*_segmented[2]` wire shape — one broadcast dim join at export
+    * time; sentinels carry empty axes, they are never folded). The
+    * nation joins DIM-side before the one broadcast, the segmentDim2
+    * discipline. */
   private def nightsFixtureOf(s: SparkSession, d: String,
-                              seg: Boolean,
-                              seg2: Boolean = false): java.io.File =
-    stagedDrops.computeIfAbsent(
-      if (seg2) s"$d#seg2" else if (seg) s"$d#seg" else d, _ => {
+                              axes: Seq[String]): java.io.File =
+    stagedDrops.computeIfAbsent((d +: axes).mkString("#"), _ => {
       import s.implicits._
       val dir = graft.operators.DedupIndex.freshRunDir(
-        if (seg2) "graft_nightseg2_"
-        else if (seg) "graft_nightseg_" else "graft_nights_", d)
+        s"graft_night${if (axes.isEmpty) "s" else axes.mkString}_", d)
       dir.mkdirs()
       val base = graft.Tables.events(s, d)
         .select(col("user_id").cast("long").as("user_id"),
           col("ts").cast("timestamp").as("ts"),
           col("event_id").cast("long").as("event_id"), col("event_type"))
-      val custBase = graft.Tables.customer(s, d)
-      val dim =
-        if (seg2) custBase
-          .join(graft.Tables.nation(s, d),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey").cast("long").as("user_id"),
-            col("c_mktsegment").as("seg"), col("n_name").as("seg2"))
-        else custBase
-          .select(col("c_custkey").cast("long").as("user_id"),
-            col("c_mktsegment").as("seg"))
-      val ev = if (!seg && !seg2) base
+      val cust = graft.Tables.customer(s, d)
+      val dim = (if (axes.contains("seg2")) cust.join(graft.Tables.nation(s, d),
+          col("c_nationkey") === col("n_nationkey")) else cust)
+        .select(col("c_custkey").cast("long").as("user_id") +:
+          axes.map(a => col(FixtureAxes(a)).as(a)): _*)
+      val ev = if (axes.isEmpty) base
         else base.join(broadcast(dim), Seq("user_id"))
       // time-tertile nights off the two-value bound (driver scalars)
       val b = ev.agg(min(unix_micros(col("ts"))),
@@ -535,11 +497,7 @@ object Maintained {
         val row = Seq((SentinelUser,
             new java.sql.Timestamp(maxTs.getTime + plusDays * 86400000L),
             0L, SentinelType)).toDF("user_id", "ts", "event_id", "event_type")
-        val sentinel =
-          if (seg2) row.withColumn("seg", lit("")).withColumn("seg2", lit(""))
-          else if (seg) row.withColumn("seg", lit(""))
-          else row
-        dropFile(sentinel, dir, n)
+        dropFile(axes.foldLeft(row)(_.withColumn(_, lit(""))), dir, n)
       }
       dir
     })
@@ -1294,10 +1252,9 @@ object Maintained {
     * earlier ones advanced. */
   private def driveMaintained(s: SparkSession, d: String, prefix: String,
                               fold: ReportFold,
-                              cycles: Seq[Seq[String]],
-                              seg: Boolean = false,
-                              seg2: Boolean = false): PointStore = {
-    val fixture = nightsFixtureOf(s, d, seg, seg2)
+                              cycles: Seq[Seq[String]]): PointStore = {
+    // a segmented fold's store keys name the axes its drops must carry
+    val fixture = nightsFixtureOf(s, d, segAxes(fold.keys))
     val root = graft.operators.DedupIndex.freshRunDir(prefix, d)
     val watched = new java.io.File(root, "drops"); watched.mkdirs()
     val store = new PointStore(s, new java.io.File(root, "report").getPath,
@@ -1365,50 +1322,79 @@ object Maintained {
     funnelSessionsReportFrom(s, store.snapshot)
   }
 
-  /** The segmented-funnel report read from a maintained
-    * (seg, step, step_name)/users store: the per-segment rows plus the
-    * "all" rollup member, derived at READ time — the twin fixes each
-    * user's ENTRY segment, so a user contributes to exactly one
-    * segment and the all-member is the plain sum over segments; the
-    * GROUPING SETS pass runs over the key-grain store rows (a
-    * handful), never the events. Shape ≡ `events_funnel_segmented`. */
-  def funnelSegmentedReportFrom(s: SparkSession,
-                                snapshot: DataFrame): DataFrame =
+  /** A segmented report read from a maintained store keyed on the axis
+    * columns `axes` plus the report's `grain`: the per-segment rows plus
+    * an "all" member on EVERY axis from one 2^N GROUPING SETS pass over
+    * the key-grain store rows (a handful), never the events. The twins
+    * pin each user's entry segment (each pair's from-event's, for
+    * paths), so every partial is over disjoint contributions and every
+    * rollup is a plain sum — or a sketch merge. Axis `seg<k>` reads as
+    * `segment<k>`: which attributes a store folds is its
+    * materialization's business. */
+  private def axesRollup(snapshot: DataFrame, axes: Seq[String],
+                         grain: Seq[String], aggs: Seq[Column],
+                         out: Seq[Column]): DataFrame =
     snapshot
-      .select(col("seg"), col("step").cast("int").as("step"),
-        col("step_name"), col("users"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("step"), col("step_name")),
-          Seq(col("step"), col("step_name"))),
-        col("seg"), col("step"), col("step_name"))
-      .agg(sum(col("users")).as("users"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        col("step"), col("step_name"), col("users"))
+      .groupingSets(graft.operators.Windows.segGroupingSets(grain.map(col), axes),
+        (axes ++ grain).map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(axes.map(a => coalesce(col(a), lit("all")).as(reportAxis(a))) ++
+        out: _*)
 
-  /** The TWO-axis segmented-funnel report read from a maintained
-    * (seg, seg2, step, step_name)/users store: the per-pair rows plus
-    * "all" members on BOTH axes from one 2^2 GROUPING SETS pass over
-    * the key-grain store rows (the twin fixes each user's entry PAIR,
-    * so every partial sum is over disjoint users and all four rollups
-    * are plain sums). Generic wire naming (`segment`, `segment2`) —
-    * which attributes a store folds is its materialization's business,
-    * exactly as the single-axis face always serves `segment`. Shape ≡
-    * `events_funnel_segmented2` modulo the second axis's name. */
-  def funnelSegmented2ReportFrom(s: SparkSession,
-                                 snapshot: DataFrame): DataFrame =
-    snapshot
-      .select(col("seg"), col("seg2"), col("step").cast("int").as("step"),
-        col("step_name"), col("users"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("seg2"), col("step"), col("step_name")),
-          Seq(col("seg"), col("step"), col("step_name")),
-          Seq(col("seg2"), col("step"), col("step_name")),
-          Seq(col("step"), col("step_name"))),
-        col("seg"), col("seg2"), col("step"), col("step_name"))
-      .agg(sum(col("users")).as("users"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        coalesce(col("seg2"), lit("all")).as("segment2"),
-        col("step"), col("step_name"), col("users"))
+  /** The segmented-funnel report read from a maintained
+    * (seg₁…segₙ, step, step_name)/users store — [[axesRollup]] at step
+    * grain. Shape ≡ `events_funnel_segmented[2]` (the second axis named
+    * `segment2`). */
+  def funnelSegmentedReportFrom(s: SparkSession, snapshot: DataFrame,
+                                axes: Seq[String] = axisNames(1)): DataFrame =
+    axesRollup(snapshot.withColumn("step", col("step").cast("int")), axes,
+      Seq("step", "step_name"), Seq(sum(col("users")).as("users")),
+      Seq(col("step"), col("step_name"), col("users")))
+
+  /** The segmented cohort matrix read from a maintained
+    * (seg₁…segₙ, cohort, offset)/users store. */
+  def retentionSegmentedReportFrom(s: SparkSession, snapshot: DataFrame,
+                                   axes: Seq[String]): DataFrame =
+    axesRollup(snapshot.withColumn("cohort", graft.Tables.tstr(col("cohort"))),
+      axes, Seq("cohort", "offset"), Seq(sum(col("users")).as("users")),
+      Seq(col("cohort"), col("offset"), col("users")))
+
+  /** The segmented transition matrix read from a maintained
+    * (seg₁…segₙ, from_step, to_step)/n store. */
+  def pathsSegmentedReportFrom(s: SparkSession, snapshot: DataFrame,
+                               axes: Seq[String]): DataFrame =
+    axesRollup(snapshot, axes, Seq("from_step", "to_step"),
+      Seq(sum(col("n")).as("n")),
+      Seq(col("from_step"), col("to_step"), col("n")))
+
+  /** The segmented hop-latency report read from a maintained
+    * (seg₁…segₙ, hop)/(n_users, sk) store: counts SUM across segments,
+    * sketches MERGE (the compactor is mergeable; in the exact regime the
+    * merged sketch holds every latency, so an "all" member's percentiles
+    * equal quantile_disc over its users). Shape ≡
+    * `funnel_latency_segmented[2]`. */
+  def latencySegmentedReportFrom(s: SparkSession, snapshot: DataFrame,
+                                 axes: Seq[String]): DataFrame = {
+    import graft.functions.SketchOps
+    axesRollup(snapshot, axes, Seq("hop"),
+      Seq(sum(col("n_users")).as("n_users"),
+        SketchOps.quantileMerge(col("sk")).as("sk")),
+      col("hop") +: col("n_users") +:
+        graft.operators.TextOps.QuantilePoints.map { case (q, n) =>
+          SketchOps.quantileAt(col("sk"), q).as(n) })
+  }
+
+  /** One segmented lifecycle: drive `typ`'s fold through the condensed
+    * cycles over the nights staged with its axes, then read the store
+    * through `report`. The registered second axis is the customer's
+    * nation, so it reads as the batch oracle's `region`. */
+  private def segmentedMaintained(s: SparkSession, d: String, prefix: String,
+                                  fold: ReportFold)(
+      report: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val store = driveMaintained(s, d, prefix, fold, cycles = Condensed)
+    report(store.snapshot, segAxes(fold.keys))
+      .withColumnRenamed("segment2", "region")
+  }
 
   /** `funnel_segmented_maintained`: the segmented funnel as a
     * maintained table — the reference's dimension expansion carried
@@ -1418,30 +1404,20 @@ object Maintained {
     * the "all" member rolls up at read time. Oracle = the segmented
     * staged-min SQL with its GROUPING SETS rollup (the batch query's
     * oracle, unchanged — the two must agree row for row). */
-  def funnelSegmentedMaintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segmaint_",
-      foldOf(s, "funnel_segmented"), cycles = Condensed, seg = true)
-    funnelSegmentedReportFrom(s, store.snapshot)
-  }
+  def funnelSegmentedMaintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segmaint_",
+      foldOf(s, "funnel_segmented"))(funnelSegmentedReportFrom(s, _, _))
 
-  /** `funnel_segmented2_maintained`: the TWO-axis segmented funnel as
-    * a maintained table — the reference's SIMULTANEOUS dimension
-    * expansion (crunch_global.sql:38-50) in the maintenance loop: the
-    * [[StreamingFunnelSegmented2]] twin pins each user's entry
-    * (segment, region) pair at their step-1 fold, the store keys on
-    * (seg, seg2, step, step_name) with an additive user count, and
-    * both "all" axes roll up at read time (2^2 grouping sets over
-    * store rows). Oracle = the batch `events_funnel_segmented2`
-    * query's staged SQL with its four grouping sets, UNCHANGED — the
-    * wire face renames its generic second axis to the oracle's
-    * `region` and the two must agree row for row. */
-  def funnelSegmented2Maintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_seg2maint_",
-      foldOf(s, "funnel_segmented2"), cycles = Condensed, seg = true,
-      seg2 = true)
-    funnelSegmented2ReportFrom(s, store.snapshot)
-      .withColumnRenamed("segment2", "region")
-  }
+  /** `funnel_segmented2_maintained`: the TWO-axis segmented funnel — the
+    * reference's SIMULTANEOUS dimension expansion (crunch_global.sql:
+    * 38-50) in the maintenance loop: the same twin pins each user's
+    * entry (segment, region) pair, the store keys on
+    * (seg, seg2, step, step_name), and both "all" axes roll up at read
+    * time (2^2 grouping sets over store rows). Oracle = the batch
+    * `events_funnel_segmented2` query's staged SQL, UNCHANGED. */
+  def funnelSegmented2Maintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_seg2maint_",
+      foldOf(s, "funnel_segmented2"))(funnelSegmentedReportFrom(s, _, _))
 
   /** `funnel_deepest_segmented_maintained`: the segmented deepest
     * funnel as a maintained table — the
@@ -1453,139 +1429,56 @@ object Maintained {
     * query's anchor-grain staged SQL with its GROUPING SETS rollup at
     * the registered 1-day horizon. */
   def funnelDeepestSegmentedMaintained(s: SparkSession,
-                                       d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segdeepmaint_",
+                                       d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segdeepmaint_",
       foldOf(s, "funnel_deepest_segmented",
         windowMs = Some(graft.operators.Windows
-          .parseHorizon(graft.operators.Windows.FunnelHorizon))),
-      cycles = Condensed, seg = true)
-    funnelSegmentedReportFrom(s, store.snapshot)
-  }
+          .parseHorizon(graft.operators.Windows.FunnelHorizon))))(
+      funnelSegmentedReportFrom(s, _, _))
 
-  /** The segmented cohort matrix read from a maintained
-    * (seg, cohort, offset)/users store — [[funnelSegmentedReportFrom]]'s
-    * read-time "all" rollup on the retention grain. */
-  def retentionSegmentedReportFrom(s: SparkSession,
-                                   snapshot: DataFrame): DataFrame =
-    snapshot
-      .select(col("seg"), graft.Tables.tstr(col("cohort")).as("cohort"),
-        col("offset"), col("users"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("cohort"), col("offset")),
-          Seq(col("cohort"), col("offset"))),
-        col("seg"), col("cohort"), col("offset"))
-      .agg(sum(col("users")).as("users"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        col("cohort"), col("offset"), col("users"))
+  /** `retention_segmented_maintained` / `retention_segmented2_maintained`:
+    * the segmented cohort matrix as a maintained table — the
+    * [[StreamingRetentionSegmented]] twin's entry-segment cells folded
+    * at (seg₁…segₙ, cohort, offset) grain. Oracle = the batch query's
+    * cohort SQL with its GROUPING SETS rollup, unchanged. */
+  def retentionSegmentedMaintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segretmaint_",
+      foldOf(s, "retention_segmented", period = Some("week")))(
+      retentionSegmentedReportFrom(s, _, _))
 
-  /** The TWO-axis cohort matrix read from a maintained
-    * (seg, seg2, cohort, offset)/users store —
-    * [[funnelSegmented2ReportFrom]]'s 2^2 read-time rollup on the
-    * retention grain (each user contributes one pinned pair, so all
-    * four rollups are plain sums). */
-  def retentionSegmented2ReportFrom(s: SparkSession,
-                                    snapshot: DataFrame): DataFrame =
-    snapshot
-      .select(col("seg"), col("seg2"),
-        graft.Tables.tstr(col("cohort")).as("cohort"),
-        col("offset"), col("users"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("seg2"), col("cohort"), col("offset")),
-          Seq(col("seg"), col("cohort"), col("offset")),
-          Seq(col("seg2"), col("cohort"), col("offset")),
-          Seq(col("cohort"), col("offset"))),
-        col("seg"), col("seg2"), col("cohort"), col("offset"))
-      .agg(sum(col("users")).as("users"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        coalesce(col("seg2"), lit("all")).as("segment2"),
-        col("cohort"), col("offset"), col("users"))
+  def retentionSegmented2Maintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segret2maint_",
+      foldOf(s, "retention_segmented2", period = Some("week")))(
+      retentionSegmentedReportFrom(s, _, _))
 
-  /** The segmented transition matrix read from a maintained
-    * (seg, from_step, to_step)/n store — same read-time rollup; the
-    * "all" member sums over segments because every pair carries
-    * exactly one (its from-event's). */
-  def pathsSegmentedReportFrom(s: SparkSession,
-                               snapshot: DataFrame): DataFrame =
-    snapshot
-      .select(col("seg"), col("from_step"), col("to_step"), col("n"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("from_step"), col("to_step")),
-          Seq(col("from_step"), col("to_step"))),
-        col("seg"), col("from_step"), col("to_step"))
-      .agg(sum(col("n")).as("n"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        col("from_step"), col("to_step"), col("n"))
+  /** `paths_segmented_maintained` / `paths_segmented2_maintained`: the
+    * segmented transition matrix as a maintained table — the
+    * [[StreamingPathsSegmented]] twin's from-attributed pairs folded at
+    * (seg₁…segₙ, from, to) grain. Oracle = the batch query's
+    * lead-window SQL with its rollup, unchanged. */
+  def pathsSegmentedMaintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segpathmaint_",
+      foldOf(s, "paths_segmented"))(pathsSegmentedReportFrom(s, _, _))
 
-  /** `retention_segmented_maintained`: the segmented cohort matrix as
-    * a maintained table — the [[StreamingRetentionSegmented]] twin's
-    * entry-segment cells folded at (seg, cohort, offset) grain.
-    * Oracle = the segmented cohort SQL with its GROUPING SETS rollup
-    * (the batch query's oracle, unchanged). */
-  def retentionSegmentedMaintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segretmaint_",
-      foldOf(s, "retention_segmented", period = Some("week")),
-      cycles = Condensed, seg = true)
-    retentionSegmentedReportFrom(s, store.snapshot)
-  }
+  def pathsSegmented2Maintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_segpath2maint_",
+      foldOf(s, "paths_segmented2"))(pathsSegmentedReportFrom(s, _, _))
 
-  /** `retention_segmented2_maintained`: the TWO-axis cohort matrix as
-    * a maintained table — the [[StreamingRetentionSegmented2]] twin's
-    * pinned-pair cells folded at (seg, seg2, cohort, offset) grain,
-    * both "all" axes read-time. Oracle = the batch
-    * `events_retention_segmented2` query's 4-set SQL, unchanged (the
-    * wire face renames its generic second axis to the oracle's
-    * `region`). */
-  def retentionSegmented2Maintained(s: SparkSession,
-                                    d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segret2maint_",
-      foldOf(s, "retention_segmented2", period = Some("week")),
-      cycles = Condensed, seg = true, seg2 = true)
-    retentionSegmented2ReportFrom(s, store.snapshot)
-      .withColumnRenamed("segment2", "region")
-  }
+  /** `latency_segmented_maintained` / `latency_segmented2_maintained`:
+    * time-to-convert BY SEGMENT as a maintained table. The
+    * [[StreamingFunnelSegmented]] reaches carry `lat_us` for free (the
+    * fin vector holds the previous reach at fold time — the plain
+    * twin's trick), so the store is one additive (seg₁…segₙ, hop) fold
+    * with a mergeable sketch measure and no second stateful pairing.
+    * Oracle = the batch query's segment-riding staged SQL with its
+    * GROUPING SETS quantile_disc rollup. */
+  def latencySegmentedMaintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_seglatmaint_",
+      foldOf(s, "latency_segmented"))(latencySegmentedReportFrom(s, _, _))
 
-  /** `paths_segmented_maintained`: the segmented transition matrix as
-    * a maintained table — the [[StreamingPathsSegmented]] twin's
-    * from-attributed pairs folded at (seg, from, to) grain. Oracle =
-    * the segmented lead-window SQL with its rollup (the batch
-    * query's, unchanged). */
-  def pathsSegmentedMaintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segpathmaint_",
-      foldOf(s, "paths_segmented"), cycles = Condensed, seg = true)
-    pathsSegmentedReportFrom(s, store.snapshot)
-  }
-
-  /** The TWO-axis transition matrix read from a maintained
-    * (seg, seg2, from_step, to_step)/n store — the 2^2 read-time
-    * rollup (every pair carries exactly one from-event pair). */
-  def pathsSegmented2ReportFrom(s: SparkSession,
-                                snapshot: DataFrame): DataFrame =
-    snapshot
-      .select(col("seg"), col("seg2"), col("from_step"), col("to_step"),
-        col("n"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("seg2"), col("from_step"), col("to_step")),
-          Seq(col("seg"), col("from_step"), col("to_step")),
-          Seq(col("seg2"), col("from_step"), col("to_step")),
-          Seq(col("from_step"), col("to_step"))),
-        col("seg"), col("seg2"), col("from_step"), col("to_step"))
-      .agg(sum(col("n")).as("n"))
-      .select(coalesce(col("seg"), lit("all")).as("segment"),
-        coalesce(col("seg2"), lit("all")).as("segment2"),
-        col("from_step"), col("to_step"), col("n"))
-
-  /** `paths_segmented2_maintained`: the two-axis transition matrix as
-    * a maintained table — [[StreamingPathsSegmented2]]'s from-pair
-    * attribution folded at (seg, seg2, from, to) grain. Oracle = the
-    * batch `events_paths_segmented2` 4-set SQL, unchanged (segment2
-    * renamed to the oracle's `region`). */
-  def pathsSegmented2Maintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_segpath2maint_",
-      foldOf(s, "paths_segmented2"), cycles = Condensed, seg = true,
-      seg2 = true)
-    pathsSegmented2ReportFrom(s, store.snapshot)
-      .withColumnRenamed("segment2", "region")
-  }
+  def latencySegmented2Maintained(s: SparkSession, d: String): DataFrame =
+    segmentedMaintained(s, d, "graft_seglat2maint_",
+      foldOf(s, "latency_segmented2"))(latencySegmentedReportFrom(s, _, _))
 
   /** `retention_maintained`: the weekly cohort matrix as a maintained
     * table. Oracle = the one-shot retention SQL (the cells are emitted
@@ -1658,77 +1551,6 @@ object Maintained {
     store.snapshot.select(col("hop") +: col("n_users") +:
       graft.operators.TextOps.QuantilePoints.map { case (q, n) =>
         SketchOps.quantileAt(col("sk"), q).as(n) }: _*)
-  }
-
-  /** The segmented hop-latency report read from a maintained
-    * (seg, hop)/(n_users, sk) store: per-segment rows plus the
-    * read-time "all" member — counts SUM across segments, sketches
-    * MERGE (the compactor is mergeable; in the exact regime the merged
-    * sketch holds every latency, so the all-member percentiles equal
-    * quantile_disc over all users). Shape ≡ `funnel_latency_segmented`. */
-  def latencySegmentedReportFrom(s: SparkSession,
-                                 snapshot: DataFrame): DataFrame = {
-    import graft.functions.SketchOps
-    snapshot.select(col("seg"), col("hop"), col("n_users"), col("sk"))
-      .groupingSets(Seq(Seq(col("seg"), col("hop")), Seq(col("hop"))),
-        col("seg"), col("hop"))
-      .agg(sum(col("n_users")).as("n_users"),
-        SketchOps.quantileMerge(col("sk")).as("sk"))
-      .select(coalesce(col("seg"), lit("all")).as("segment") +:
-        col("hop") +: col("n_users") +:
-        graft.operators.TextOps.QuantilePoints.map { case (q, n) =>
-          SketchOps.quantileAt(col("sk"), q).as(n) }: _*)
-  }
-
-  /** `latency_segmented_maintained`: time-to-convert BY SEGMENT as a
-    * maintained table — the last segmented report to gain its twin.
-    * The [[StreamingFunnelSegmented]] reaches carry `lat_us` for free
-    * (the fin vector holds the previous reach at fold time — the plain
-    * twin's trick), so the store is one additive (seg, hop) fold with
-    * a mergeable sketch measure and no second stateful pairing.
-    * Oracle = the batch query's segment-riding staged SQL with its
-    * GROUPING SETS quantile_disc rollup. */
-  def latencySegmentedMaintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_seglatmaint_",
-      foldOf(s, "latency_segmented"), cycles = Condensed, seg = true)
-    latencySegmentedReportFrom(s, store.snapshot)
-  }
-
-  /** The TWO-axis hop-latency report read from a maintained
-    * (seg, seg2, hop) store — the 2^2 rollup with counts summing and
-    * sketches MERGING on both "all" axes (exact regime ≡ the batch
-    * query's per-set quantile_disc recompute). */
-  def latencySegmented2ReportFrom(s: SparkSession,
-                                  snapshot: DataFrame): DataFrame = {
-    import graft.functions.SketchOps
-    snapshot.select(col("seg"), col("seg2"), col("hop"), col("n_users"),
-        col("sk"))
-      .groupingSets(
-        Seq(Seq(col("seg"), col("seg2"), col("hop")),
-          Seq(col("seg"), col("hop")), Seq(col("seg2"), col("hop")),
-          Seq(col("hop"))),
-        col("seg"), col("seg2"), col("hop"))
-      .agg(sum(col("n_users")).as("n_users"),
-        SketchOps.quantileMerge(col("sk")).as("sk"))
-      .select(coalesce(col("seg"), lit("all")).as("segment") +:
-        coalesce(col("seg2"), lit("all")).as("segment2") +:
-        col("hop") +: col("n_users") +:
-        graft.operators.TextOps.QuantilePoints.map { case (q, n) =>
-          SketchOps.quantileAt(col("sk"), q).as(n) }: _*)
-  }
-
-  /** `latency_segmented2_maintained`: two-axis time-to-convert as a
-    * maintained table — [[StreamingFunnelSegmented2]]'s reaches carry
-    * `lat_us` exactly like the single-axis twin's, so the store is one
-    * additive (seg, seg2, hop) fold with the mergeable sketch measure.
-    * Oracle = the batch `funnel_latency_segmented2` 4-set SQL,
-    * unchanged (segment2 renamed to the oracle's `region`). */
-  def latencySegmented2Maintained(s: SparkSession, d: String): DataFrame = {
-    val store = driveMaintained(s, d, "graft_seglat2maint_",
-      foldOf(s, "latency_segmented2"), cycles = Condensed, seg = true,
-      seg2 = true)
-    latencySegmented2ReportFrom(s, store.snapshot)
-      .withColumnRenamed("segment2", "region")
   }
 
   /** `report_takedown`: the compliance story for a maintained analytics

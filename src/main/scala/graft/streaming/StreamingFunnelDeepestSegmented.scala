@@ -2,45 +2,46 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.math.Ordering.Implicits.seqOrdering
 
 /** Streaming twin of `Windows.funnelDeepestOf(by = ...)`: the ANCHORED
-  * deepest-chain funnel SEGMENTED by a user attribute — the last
-  * funnel flavor onto the family's segment axis, maintained.
+  * deepest-chain funnel SEGMENTED by N user attributes — the last
+  * funnel flavor onto the family's segment axes, maintained.
   * [[StreamingFunnelDeepest]]'s existential law, bounded-anchor state
   * and eager depth-increase emission are unchanged (its scaladoc
   * carries the finality argument); what this twin adds is the ENTRY
-  * SEGMENT riding the fold:
+  * SEGMENT `(seg₁…segₙ)` riding the fold:
   *
-  *   - the segment is the user's FIRST step-1 event's attribute (the
+  *   - the segment is the user's FIRST step-1 event's attributes (the
   *     family's defining-moment rule, stated on the batch operator) —
   *     NOT the converting anchor's. Entry is the only sample point
   *     final at watermark: the converting anchor isn't known until the
   *     depth stops growing, and an emission must never be retracted;
   *   - the fold processes finalized events in ascending
-  *     `(ts, step, seg)` order, so among duplicate-timestamp entry
-  *     events the SMALLEST segment folds first — the batch operator's
-  *     min-over-(ts, segment)-pairs tie law, stream ≡ batch;
+  *     `(ts, step, seg₁…segₙ)` order, so among duplicate-timestamp entry
+  *     events the lexicographically smallest segment folds first — the
+  *     batch operator's min-over-(ts, struct) tie law, stream ≡ batch;
   *   - the segment pins at the user's first anchor creation and is
-  *     immortal beside `emitted` (one string, the same floor as the
-  *     chained segmented twin); every depth-increase emission carries
-  *     it, so the (seg, step) cells are additive and the "all" member
-  *     is a read-time rollup (`funnelSegmentedReportFrom` — the
+  *     immortal beside `emitted` (the same floor as the chained
+  *     segmented twin); every depth-increase emission carries it, so
+  *     the (seg₁…segₙ, step) cells are additive and the "all" members
+  *     are a read-time rollup (`funnelSegmentedReportFrom` — the
   *     deepest store shares the chained segmented store's shape). */
 object StreamingFunnelDeepestSegmented {
 
   val Steps: Seq[String] = graft.operators.Windows.FunnelSteps
 
   final case class Ev(user_id: Long, ts: java.sql.Timestamp,
-                      event_type: String, seg: String)
-  final case class Reach(user_id: Long, seg: String, step: Int,
+                      event_type: String, seg: Seq[String])
+  final case class Reach(user_id: Long, seg: Seq[String], step: Int,
                          step_name: String, ts: java.sql.Timestamp)
   /** [[StreamingFunnelDeepest.DeepState]] plus the pinned entry
-    * segment (null until the first anchor folds); buf carries seg
+    * segment (empty until the first anchor folds); buf carries seg
     * uniformly — it matters only for step-1 candidates, but one shape
     * keeps the hold buffer simple. */
   final case class SegDeepState(
-    emitted: Int, entrySeg: String,
-    anchors: Seq[(Long, Int, Long)], buf: Seq[(Long, Int, String)])
+    emitted: Int, entrySeg: Seq[String],
+    anchors: Seq[(Long, Int, Long)], buf: Seq[(Long, Int, Seq[String])])
 
   def step(steps: Seq[String], horizonMs: Long)(
       userId: Long, events: Iterator[Ev],
@@ -51,7 +52,7 @@ object StreamingFunnelDeepestSegmented {
     val wmUs = EventTime.msToUsSat(wm)
     val hUs = EventTime.msToUsSat(horizonMs)
     val stepIdx = steps.zipWithIndex.toMap
-    val prior = state.getOption.getOrElse(SegDeepState(0, null, Nil, Nil))
+    val prior = state.getOption.getOrElse(SegDeepState(0, Nil, Nil, Nil))
     val incoming = events.flatMap(e =>
       stepIdx.get(e.event_type).map(i => (EventTime.usOf(e.ts), i, e.seg)))
     val (ready, hold) = (prior.buf ++ incoming).partition(_._1 < wmUs)
@@ -68,8 +69,8 @@ object StreamingFunnelDeepestSegmented {
           EventTime.tsOfUs(tUs))
         emitted = depth
       }
-    // ascending (ts, step, seg): the seg tie-break IS the batch
-    // operator's min-over-(ts, segment)-pairs law at the entry; for
+    // ascending (ts, step, seg₁…segₙ): the segment tie-break IS the
+    // batch operator's min-over-(ts, struct) law at the entry; for
     // chaining it is inert (same-µs events never chain — strict >)
     ready.sorted.foreach { case (t, i, seg) =>
       anchors = anchors.map { case a @ (t1, d, tl) =>
@@ -79,14 +80,14 @@ object StreamingFunnelDeepestSegmented {
         } else a
       }
       if (i == 0 && !anchors.exists(_._1 == t)) { // new anchor (dedup on t1)
-        if (entrySeg == null) entrySeg = seg // the defining moment
+        if (entrySeg.isEmpty) entrySeg = seg // the defining moment
         anchors :+= ((t, 1, t))
         reach(1, t)
       }
     }
     anchors = anchors.filter { case (t1, _, _) => wmUs - t1 <= hUs }
     if (emitted == 0 && anchors.isEmpty && hold.isEmpty)
-      state.remove() // entrySeg is null here: no step-1 ever folded
+      state.remove() // entrySeg is empty here: no step-1 ever folded
     else {
       state.update(SegDeepState(emitted, entrySeg, anchors, hold))
       val wake = (hold.map(_._1 / 1000 + 1) ++

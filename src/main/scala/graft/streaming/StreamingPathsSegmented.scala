@@ -3,28 +3,30 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming twin of `Windows.eventsPathsSegmented`'s law: the
+/** Streaming twin of `Windows.pathsSegmentedOf`'s law: the
   * path-transition matrix with each pair attributed to its FROM event's
-  * segment (the segmented family's defining-moment rule — a transition
-  * "belongs" to where it started). [[StreamingPaths]]'s fold is
-  * unchanged (events finalize under the watermark, chain off the last
-  * finalized event in ascending (ts, seq) order, optional gap bound);
-  * the segment simply rides each event, and the emitted pair carries
-  * the from-event's — no new finality argument is needed because the
-  * from event IS finalized when its pair emits. State grows by one
-  * string on the last-event link and one per held event. */
+  * N attributes (the segmented family's defining-moment rule — a
+  * transition "belongs" to where it started). [[StreamingPaths]]'s fold
+  * is unchanged (events finalize under the watermark, chain off the
+  * last finalized event in ascending (ts, seq) order, optional gap
+  * bound); the segment `(seg₁…segₙ)` simply rides each event, and the
+  * emitted pair carries the from-event's — no new finality argument is
+  * needed because the from event IS finalized when its pair emits. The
+  * (seg₁…segₙ, from, to) counts stay additive, with every "all" member a
+  * read-time 2^N rollup. State grows by one segment on the last-event
+  * link and one per held event. */
 object StreamingPathsSegmented {
 
   final case class Ev(user_id: Long, ts: java.sql.Timestamp, seq: Long,
-                      event_type: String, seg: String)
-  final case class Pair(user_id: Long, seg: String, from_step: String,
+                      event_type: String, seg: Seq[String])
+  final case class Pair(user_id: Long, seg: Seq[String], from_step: String,
                         to_step: String)
   /** last = (tsUs, seq, type, seg) of the last finalized event; buf =
     * held events. Times are epoch MICROSECONDS ([[EventTime]] — the
     * plain twin's grain argument). */
   final case class SegPathState(
-    last: Option[(Long, Long, String, String)],
-    buf: Seq[(Long, Long, String, String)])
+    last: Option[(Long, Long, String, Seq[String])],
+    buf: Seq[(Long, Long, String, Seq[String])])
 
   /** `gapMs` bounds adjacency to the gap-session grain exactly as
     * [[StreamingPaths.step]] does. */

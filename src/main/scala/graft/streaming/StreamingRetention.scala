@@ -41,7 +41,7 @@ object StreamingRetention {
     * unpinned); offsets = cells already emitted; buf = held event ms. */
   final case class RetState(cohortDay: Long, offsets: Seq[Int], buf: Seq[Long])
 
-  private def truncDay(ms: Long, period: String): Long = {
+  private[streaming] def truncDay(ms: Long, period: String): Long = {
     val d = LocalDate.ofInstant(Instant.ofEpochMilli(ms), ZoneOffset.UTC)
     (period match {
       case "day"   => d
@@ -51,7 +51,7 @@ object StreamingRetention {
     }).toEpochDay
   }
 
-  private def offsetOf(evDay: Long, cohortDay: Long, period: String): Int =
+  private[streaming] def offsetOf(evDay: Long, cohortDay: Long, period: String): Int =
     period match {
       case "day"  => (evDay - cohortDay).toInt
       case "week" => ((evDay - cohortDay) / 7).toInt

@@ -2,65 +2,51 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import java.time.{DayOfWeek, Instant, LocalDate, ZoneOffset}
+import java.time.{LocalDate, ZoneOffset}
+import scala.math.Ordering.Implicits.seqOrdering
 
-/** Streaming twin of `Windows.eventsRetentionSegmented`'s law: the
-  * cohort retention matrix SEGMENTED by the attribute the user's
+/** Streaming twin of `Windows.retentionSegmentedOf`'s law: the cohort
+  * retention matrix SEGMENTED by the N attributes the user's
   * COHORT-DEFINING event carries. [[StreamingRetention]]'s design is
   * unchanged (cohort pins off the finalized minimum, cells emit exactly
   * once per (user, offset), state bounded by the calendar); what this
-  * twin adds is the entry segment riding the pin:
+  * twin adds is the entry segment `(seg₁…segₙ)` riding the pin:
   *
   *   - the segment FINALIZES with the cohort, by the same argument: at
   *     pin time every admissible event with `ts < wm` has arrived, so
-  *     the minimum (ts, seg) PAIR among them is the global minimum —
-  *     no later admissible event can tie the ts, let alone beat it —
-  *     and its `seg` is exactly the batch operator's deterministic
-  *     min-over-(ts, segment)-pairs entry sample;
-  *   - every cell emits the pinned segment, so the (seg, cohort,
-  *     offset) counts are additive (one segment per user) and the
-  *     "all" member is a read-time rollup over the store rows.
+  *     the minimum (ts, seg₁…segₙ) tuple among them is the global
+  *     minimum — no later admissible event can tie the ts, let alone
+  *     beat it — and its segment is exactly the batch operator's
+  *     deterministic min-over-(ts, struct) entry sample (lexicographic,
+  *     so among duplicate-timestamp cohort events ONE event's segment is
+  *     sampled; independent per-attribute mins would fabricate a
+  *     segment no event carried);
+  *   - every cell emits the pinned segment, so the (seg₁…segₙ, cohort,
+  *     offset) counts are additive (one segment per user) and every
+  *     "all" member is a read-time 2^N rollup over the store rows.
   *
-  * State per user beyond the classic twin's: the pinned segment string
-  * and a seg per held event (the pin needs the pair, not the time
+  * State per user beyond the classic twin's: the pinned segment and a
+  * segment per held event (the pin needs the tuple, not the time
   * alone). */
 object StreamingRetentionSegmented {
+  import StreamingRetention.{offsetOf, truncDay}
 
-  final case class Ev(user_id: Long, ts: java.sql.Timestamp, seg: String)
-  final case class Cell(user_id: Long, seg: String,
+  final case class Ev(user_id: Long, ts: java.sql.Timestamp, seg: Seq[String])
+  final case class Cell(user_id: Long, seg: Seq[String],
                         cohort: java.sql.Timestamp, offset: Int)
   /** cohortDay = epoch day of the truncated cohort period (-1 =
     * unpinned); seg = the entry segment (pinned with the cohort);
     * offsets = cells already emitted; buf = held (ms, seg) pairs. */
-  final case class SegRetState(cohortDay: Long, seg: String,
-                               offsets: Seq[Int], buf: Seq[(Long, String)])
-
-  private def truncDay(ms: Long, period: String): Long = {
-    val d = LocalDate.ofInstant(Instant.ofEpochMilli(ms), ZoneOffset.UTC)
-    (period match {
-      case "day"   => d
-      case "week"  => d.`with`(java.time.temporal.TemporalAdjusters
-        .previousOrSame(DayOfWeek.MONDAY))
-      case "month" => d.withDayOfMonth(1)
-    }).toEpochDay
-  }
-
-  private def offsetOf(evDay: Long, cohortDay: Long, period: String): Int =
-    period match {
-      case "day"  => (evDay - cohortDay).toInt
-      case "week" => ((evDay - cohortDay) / 7).toInt
-      case "month" =>
-        val e = LocalDate.ofEpochDay(evDay)
-        val c = LocalDate.ofEpochDay(cohortDay)
-        (e.getYear - c.getYear) * 12 + (e.getMonthValue - c.getMonthValue)
-    }
+  final case class SegRetState(cohortDay: Long, seg: Seq[String],
+                               offsets: Seq[Int],
+                               buf: Seq[(Long, Seq[String])])
 
   def step(period: String)(userId: Long, events: Iterator[Ev],
            state: GroupState[SegRetState]): Iterator[Cell] = {
     val wm = try state.getCurrentWatermarkMs() catch {
       case _: UnsupportedOperationException => Long.MaxValue
     }
-    val prior = state.getOption.getOrElse(SegRetState(-1L, null, Nil, Nil))
+    val prior = state.getOption.getOrElse(SegRetState(-1L, Nil, Nil, Nil))
     val (ready, hold) =
       (prior.buf ++ events.map(e => (e.ts.getTime, e.seg))).partition(_._1 < wm)
     var cohortDay = prior.cohortDay
@@ -69,8 +55,8 @@ object StreamingRetentionSegmented {
     val emitted = Vector.newBuilder[Cell]
     if (ready.nonEmpty) {
       if (cohortDay < 0) {
-        // the pin takes the minimum (ts, seg) PAIR — the batch entry
-        // sample's tie law, final by the watermark argument above
+        // the pin takes the minimum (ts, seg₁…segₙ) tuple — the batch
+        // entry sample's tie law, final by the watermark argument above
         val e = ready.min
         cohortDay = truncDay(e._1, period)
         seg = e._2

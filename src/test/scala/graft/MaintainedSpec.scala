@@ -552,8 +552,8 @@ class MaintainedSpec extends SparkSpec {
       Seq(ev(-1, "2024-01-05 00:00:00.0", 0, "_watermark", "", ""))
         .toDF(cols: _*))
     def report: Map[(String, String, Int), Long] = Maintained
-      .funnelSegmented2ReportFrom(spark,
-        PointStore.open(spark, dir.getPath).snapshot)
+      .funnelSegmentedReportFrom(spark,
+        PointStore.open(spark, dir.getPath).snapshot, Seq("seg", "seg2"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)) ->
         r.getLong(4)).toMap
     assert(report == Map(

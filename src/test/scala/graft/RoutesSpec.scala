@@ -171,22 +171,41 @@ class RoutesSpec extends SparkSpec {
   test("strings echoed into JSON are escaped: quotes in a path name and a " +
       "control character in a recipe tag still give valid JSON") {
     withServer(roots = true) { (port, _) =>
-      val echoed = Seq("/query/%22", "/explain/%22").flatMap { p =>
+      val echoed = Seq("/query/%22", "/explain/%22", "/query/%09").flatMap { p =>
         call(port, "GET", p) match {
           case Right((404, b)) if errorObject(b) && b.contains("unknown query") =>
             None
           case other => Some(s"GET $p: $other")
         }
       }
+      // a recipe tag obeys the served-tag charset: a tab is refused with
+      // a JSON error and commits nothing
       val posted = call(port, "POST", "/recipe?store=r&tag=a%09b")
       val read = call(port, "GET", "/recipe?store=r") match {
-        case Right((200, body)) if scala.util.Try(json.readTree(body)
-            .get("tag").asText == "a\tb").getOrElse(false) => None
-        case other => Some(s"GET /recipe after a tab-tagged commit: $other")
+        case Right((404, body)) if errorObject(body) => None
+        case other => Some(s"GET /recipe after a refused tab tag: $other")
       }
       val bad = echoed ++ read
-      assert(posted.exists(_._1 == 200), posted)
+      assert(posted.exists { case (c, b) => c == 400 && errorObject(b) }, posted)
       assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+    }
+  }
+
+  test("error replies name the store, never the server's filesystem path") {
+    withServer(roots = true) { (port, root) =>
+      val canonical = new java.io.File(root).getCanonicalPath
+      assert(call(port, "POST", "/recipe?store=r&tag=t1").exists(_._1 == 200))
+      new java.io.File(s"$root/stores/taken").mkdirs()
+      val leaks = Seq(("GET", "/store/missing", 404),
+          ("GET", "/recipe?store=r&version=9", 400),
+          ("POST", "/backup?store=r&dest=taken", 400)).flatMap {
+        case (m, p, want) => call(port, m, p) match {
+          case Right((`want`, body)) if errorObject(body) &&
+              !body.contains(root) && !body.contains(canonical) => None
+          case other => Some(s"$m $p: want $want without the root, got $other")
+        }
+      }
+      assert(leaks.isEmpty, leaks.mkString("\n", "\n", ""))
     }
   }
 }

@@ -133,41 +133,43 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingFunnelSegmented
     import graft.streaming.StreamingFunnelSegmented.Ev
     implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, typ: String, seg: String*) = Ev(u, t, typ, seg)
     val chunk1 = Seq(
       // user 1 converts in order across the two chunks
-      Ev(1, ts(1), "view", "AUTO"), Ev(1, ts(2), "click", "AUTO"),
+      ev(1, ts(1), "view", "AUTO"), ev(1, ts(2), "click", "AUTO"),
       // user 2's purchase precedes its view: view+click only
-      Ev(2, ts(1), "purchase", "BLDG"), Ev(2, ts(2), "view", "BLDG"),
+      ev(2, ts(1), "purchase", "BLDG"), ev(2, ts(2), "view", "BLDG"),
       // user 5's click+purchase arrive BEFORE its view (next chunk,
       // earlier event time): the held fold converts all three under
       // the view's segment
-      Ev(5, ts(2), "click", "MACH"), Ev(5, ts(3), "purchase", "MACH"),
+      ev(5, ts(2), "click", "MACH"), ev(5, ts(3), "purchase", "MACH"),
       // user 6: the ENTRY TIE — two views at the same instant with
       // different segments, across chunks; min-(ts, seg) picks "AAA"
-      Ev(6, ts(4), "view", "BBB"),
+      ev(6, ts(4), "view", "BBB"),
       // user 3 never views
-      Ev(3, ts(1), "click", "HSLD"))
+      ev(3, ts(1), "click", "HSLD"))
     val chunk2 = Seq(
-      Ev(1, ts(3), "purchase", "AUTO"), Ev(2, ts(3), "click", "BLDG"),
-      Ev(5, ts(1), "view", "MACH"),
-      Ev(6, ts(4), "view", "AAA"), Ev(6, ts(6), "click", "ZZZ"),
+      ev(1, ts(3), "purchase", "AUTO"), ev(2, ts(3), "click", "BLDG"),
+      ev(5, ts(1), "view", "MACH"),
+      ev(6, ts(4), "view", "AAA"), ev(6, ts(6), "click", "ZZZ"),
       // user 7's events carry DIFFERENT segments: the entry one rides
-      Ev(7, ts(1), "view", "X"), Ev(7, ts(2), "click", "Y"))
+      ev(7, ts(1), "view", "X"), ev(7, ts(2), "click", "Y"))
 
     val stream = MemoryStream[Ev]
     stream.addData(chunk1)
     stream.addData(chunk2)
-    stream.addData(Seq(Ev(99, ts(100000), "sentinel", "")))
+    stream.addData(Seq(ev(99, ts(100000), "sentinel", "")))
     val q = StreamingFunnelSegmented.funnel(spark, stream.toDS)
       .writeStream.format("memory").queryName("segfun_out")
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
 
     val got = spark.table("segfun_out").filter(col("user_id") =!= 99)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+      .collect().map(r => (r.getLong(0), r.getSeq[String](1).head, r.getInt(2),
         r.getTimestamp(4))).toSet
     val batch = graft.operators.Windows
-      .funnelOf((chunk1 ++ chunk2).toDF("user_id", "ts", "event_type", "seg"),
+      .funnelOf((chunk1 ++ chunk2).toDF("user_id", "ts", "event_type", "seg")
+          .withColumn("seg", col("seg")(0)),
         StreamingFunnelSegmented.Steps, by = Some(col("seg")))
       .zipWithIndex.flatMap { case (df, i) =>
         df.collect().map(r => (r.getLong(0), r.getString(2), i + 1,
@@ -192,39 +194,41 @@ class StreamingSpec extends SparkSpec {
       "lexicographic TUPLE tie law — one event's pair, never " +
       "per-attribute mins") {
     import spark.implicits._
-    import graft.streaming.StreamingFunnelSegmented2
-    import graft.streaming.StreamingFunnelSegmented2.Ev
+    import graft.streaming.StreamingFunnelSegmented
+    import graft.streaming.StreamingFunnelSegmented.Ev
     implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, typ: String, seg: String*) = Ev(u, t, typ, seg)
     val chunk1 = Seq(
       // user 1 converts in order across the two chunks
-      Ev(1, ts(1), "view", "AUTO", "N1"), Ev(1, ts(2), "click", "AUTO", "N1"),
+      ev(1, ts(1), "view", "AUTO", "N1"), ev(1, ts(2), "click", "AUTO", "N1"),
       // user 6: the PAIR TIE — duplicate-ts entries carrying (B, A)
       // and (A, Z), across chunks; the tuple law samples ONE event's
       // pair, the lexicographically smaller (A, Z) — per-attribute
       // mins would fabricate (A, A), a pair no event carried
-      Ev(6, ts(4), "view", "B", "A"))
+      ev(6, ts(4), "view", "B", "A"))
     val chunk2 = Seq(
-      Ev(1, ts(3), "purchase", "AUTO", "N1"),
-      Ev(6, ts(4), "view", "A", "Z"), Ev(6, ts(6), "click", "Q", "Q"),
+      ev(1, ts(3), "purchase", "AUTO", "N1"),
+      ev(6, ts(4), "view", "A", "Z"), ev(6, ts(6), "click", "Q", "Q"),
       // user 7's later events carry different pairs: the entry's rides
-      Ev(7, ts(1), "view", "X", "N2"), Ev(7, ts(2), "click", "Y", "N3"))
+      ev(7, ts(1), "view", "X", "N2"), ev(7, ts(2), "click", "Y", "N3"))
 
     val stream = MemoryStream[Ev]
     stream.addData(chunk1)
     stream.addData(chunk2)
-    stream.addData(Seq(Ev(99, ts(100000), "sentinel", "", "")))
-    val q = StreamingFunnelSegmented2.funnel(spark, stream.toDS)
+    stream.addData(Seq(ev(99, ts(100000), "sentinel", "", "")))
+    val q = StreamingFunnelSegmented.funnel(spark, stream.toDS)
       .writeStream.format("memory").queryName("seg2fun_out")
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
 
     val got = spark.table("seg2fun_out").filter(col("user_id") =!= 99)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getInt(3), r.getTimestamp(5))).toSet
+      .collect().map(r => (r.getLong(0), r.getSeq[String](1)(0),
+        r.getSeq[String](1)(1), r.getInt(2), r.getTimestamp(4))).toSet
     val batch = graft.operators.Windows
       .funnelOf(
-        (chunk1 ++ chunk2).toDF("user_id", "ts", "event_type", "seg", "seg2"),
-        StreamingFunnelSegmented2.Steps,
+        (chunk1 ++ chunk2).toDF("user_id", "ts", "event_type", "seg")
+          .withColumn("seg2", col("seg")(1)).withColumn("seg", col("seg")(0)),
+        StreamingFunnelSegmented.Steps,
         by = Some(struct(col("seg").as("seg"), col("seg2").as("seg2"))))
       .zipWithIndex.flatMap { case (df, i) =>
         df.select(col("user_id"), col("t"), col("_seg.seg"),
@@ -489,26 +493,27 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingFunnelDeepestSegmented
     import graft.streaming.StreamingFunnelDeepestSegmented.Ev
     implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, typ: String, seg: String*) = Ev(u, t, typ, seg)
     val horizon = "10m"
     val chunk1 = Seq(
       // user 1: the entry view carries seg A; only the view@12 (seg B)
       // anchors the converting window — every emission must still read
       // A (the defining-moment rule; the converting anchor is unknown
       // until the depth stops growing)
-      Ev(1, ts(1), "view", "A"),
+      ev(1, ts(1), "view", "A"),
       // user 2: plain conversion, one segment
-      Ev(2, ts(2), "view", "C"), Ev(2, ts(3), "click", "C"),
-      Ev(2, ts(4), "purchase", "C"),
+      ev(2, ts(2), "view", "C"), ev(2, ts(3), "click", "C"),
+      ev(2, ts(4), "purchase", "C"),
       // user 6: the entry tie — two views at the SAME instant, the
       // smaller segment value must pin (the batch min-pair law)
-      Ev(6, ts(5), "view", "ZZ"), Ev(6, ts(5), "view", "BB"),
-      Ev(6, ts(6), "click", "ZZ"))
+      ev(6, ts(5), "view", "ZZ"), ev(6, ts(5), "view", "BB"),
+      ev(6, ts(6), "click", "ZZ"))
     val chunk2 = Seq(
-      Ev(1, ts(12), "view", "B"), Ev(1, ts(15), "click", "B"),
-      Ev(1, ts(16), "purchase", "B"))
+      ev(1, ts(12), "view", "B"), ev(1, ts(15), "click", "B"),
+      ev(1, ts(16), "purchase", "B"))
     val stream = MemoryStream[Ev]
     stream.addData(chunk1); stream.addData(chunk2)
-    stream.addData(Seq(Ev(99, ts(100000), "sentinel", "")))
+    stream.addData(Seq(ev(99, ts(100000), "sentinel", "")))
     val q = StreamingFunnelDeepestSegmented
       .funnel(spark, stream.toDS, horizon)
       .writeStream.format("memory").queryName("segdeep_out")
@@ -517,7 +522,7 @@ class StreamingSpec extends SparkSpec {
 
     val out = spark.table("segdeep_out").filter(col("user_id") =!= 99)
     val raw = out.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .map(r => (r.getLong(0), r.getSeq[String](1).head, r.getInt(2)))
     assert(raw.distinct.length == raw.length, s"dup reaches: ${raw.toSeq}")
     // entry pins: user 1 reaches depth 3 via the seg-B anchor but
     // reports A; user 6's same-instant tie broke to BB
@@ -526,7 +531,7 @@ class StreamingSpec extends SparkSpec {
     assert(raw.filter(_._1 == 6L).map(_._2).distinct.toSeq == Seq("BB"))
     // aggregated reaches through the read-time rollup ≡ the batch
     // segmented deepest report (fine rows AND "all" members)
-    val fine = out.groupBy(col("seg"), col("step"), col("step_name"))
+    val fine = out.groupBy(col("seg")(0).as("seg"), col("step"), col("step_name"))
       .agg(count(lit(1)).as("users"))
     val got = graft.streaming.Maintained
       .funnelSegmentedReportFrom(spark, fine)
@@ -534,11 +539,13 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
       .toSet
     val all = (chunk1 ++ chunk2).toDF("user_id", "ts", "event_type", "seg")
+      .withColumn("seg", col("seg")(0))
     val h = graft.operators.Windows.parseHorizon(horizon)
     val stages = graft.operators.Windows.funnelDeepestOf(all,
-      StreamingFunnelDeepestSegmented.Steps, h, by = Some(col("seg")))
+      StreamingFunnelDeepestSegmented.Steps, h,
+      by = Some(graft.operators.Windows.segPayload(Seq("seg"))))
     val batch = graft.operators.Windows.segmentedFunnelReport(stages,
-        StreamingFunnelDeepestSegmented.Steps,
+        StreamingFunnelDeepestSegmented.Steps, Seq("seg" -> "segment"),
         Seq(countDistinct(col("user_id")).as("users")), Seq("users"))
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
@@ -651,23 +658,24 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingRetentionSegmented
     import graft.streaming.StreamingRetentionSegmented.Ev
     implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, seg: String*) = Ev(u, t, seg)
     val chunk1 = Seq(
       // user 1: days 1, 1 (dup period), 3 — one segment throughout
-      Ev(1, ts(1500), "A"), Ev(1, ts(1600), "A"),
-      Ev(1, ts(1440 * 3 + 10), "A"),
+      ev(1, ts(1500), "A"), ev(1, ts(1600), "A"),
+      ev(1, ts(1440 * 3 + 10), "A"),
       // user 2: first event arrives in chunk 2 with an EARLIER time
       // and a different segment — cohort AND segment must re-pin
-      Ev(2, ts(1440 * 2 + 5), "B"),
+      ev(2, ts(1440 * 2 + 5), "B"),
       // user 6: the entry tie — same instant, different segments
-      Ev(6, ts(1440 + 30), "BBB"))
+      ev(6, ts(1440 + 30), "BBB"))
     val chunk2 = Seq(
-      Ev(2, ts(200), "C"), // shifts user 2's cohort to day 0, seg to C
-      Ev(6, ts(1440 + 30), "AAA"), // ties user 6's entry: min seg wins
-      Ev(3, ts(1440 * 4 + 1), "D"))
+      ev(2, ts(200), "C"), // shifts user 2's cohort to day 0, seg to C
+      ev(6, ts(1440 + 30), "AAA"), // ties user 6's entry: min seg wins
+      ev(3, ts(1440 * 4 + 1), "D"))
     val stream = MemoryStream[Ev]
     stream.addData(chunk1)
     stream.addData(chunk2)
-    stream.addData(Seq(Ev(99, ts(100000), "")))
+    stream.addData(Seq(ev(99, ts(100000), "")))
     val q = StreamingRetentionSegmented.cells(spark, stream.toDS, "day")
       .writeStream.format("memory").queryName("segret_out")
       .outputMode("append").start()
@@ -675,22 +683,23 @@ class StreamingSpec extends SparkSpec {
 
     val cells = spark.table("segret_out").filter(col("user_id") =!= 99)
     val raw = cells.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2), r.getInt(3)))
+      .map(r => (r.getLong(0), r.getSeq[String](1).head, r.getTimestamp(2),
+        r.getInt(3)))
     assert(raw.distinct.length == raw.length, "cells must be unique")
     // entry pins: user 2 re-pinned to C, user 6's tie broke to AAA
     assert(raw.filter(_._1 == 2L).map(_._2).distinct.toSeq == Seq("C"))
     assert(raw.filter(_._1 == 6L).map(_._2).distinct.toSeq == Seq("AAA"))
     // the aggregated cells through the read-time rollup ≡ the batch
     // segmented matrix (fine rows AND the "all" members)
-    val fine = cells.groupBy(col("seg"), col("cohort"), col("offset"))
+    val fine = cells.groupBy(col("seg")(0).as("seg"), col("cohort"), col("offset"))
       .agg(count(lit(1)).as("users"))
     val got = graft.streaming.Maintained
-      .retentionSegmentedReportFrom(spark, fine)
+      .retentionSegmentedReportFrom(spark, fine, Seq("seg"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
       .toSet
     val batch = graft.operators.Windows.retentionSegmentedOf(
-        (chunk1 ++ chunk2).map(e => (e.user_id, e.ts, e.seg))
+        (chunk1 ++ chunk2).map(e => (e.user_id, e.ts, e.seg.head))
           .toDF("user_id", "ts", "seg"), "day")
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3)))
@@ -705,21 +714,23 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingPathsSegmented
     import graft.streaming.StreamingPathsSegmented.Ev
     implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, seq: Long, typ: String, seg: String*) =
+      Ev(u, t, seq, typ, seg)
     val chunk1 = Seq(
       // user 1: a → b → c with the MIDDLE event arriving late (next
       // chunk) — the finalized fold must splice it in, and the pairs
       // must carry the from-events' segments (X then Y)
-      Ev(1, ts(1), 1, "a", "X"), Ev(1, ts(3), 3, "c", "X"),
+      ev(1, ts(1), 1, "a", "X"), ev(1, ts(3), 3, "c", "X"),
       // user 2: one event, no pair
-      Ev(2, ts(1), 4, "a", "Z"))
+      ev(2, ts(1), 4, "a", "Z"))
     val chunk2 = Seq(
-      Ev(1, ts(2), 2, "b", "Y"),
+      ev(1, ts(2), 2, "b", "Y"),
       // user 3: a strict (ts, seq) tie-break pair, same segment
-      Ev(3, ts(5), 6, "b", "W"), Ev(3, ts(5), 5, "a", "W"))
+      ev(3, ts(5), 6, "b", "W"), ev(3, ts(5), 5, "a", "W"))
     val stream = MemoryStream[Ev]
     stream.addData(chunk1)
     stream.addData(chunk2)
-    stream.addData(Seq(Ev(99, ts(100000), 0, "sentinel", "")))
+    stream.addData(Seq(ev(99, ts(100000), 0, "sentinel", "")))
     val q = StreamingPathsSegmented.pairs(spark, stream.toDS)
       .writeStream.format("memory").queryName("segpath_out")
       .outputMode("append").start()
@@ -727,24 +738,139 @@ class StreamingSpec extends SparkSpec {
 
     val pairs = spark.table("segpath_out").filter(col("user_id") =!= 99)
     val raw = pairs.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+      .map(r => (r.getLong(0), r.getSeq[String](1).head, r.getString(2),
+        r.getString(3)))
     // the splice carried the from segments: (X, a→b) and (Y, b→c)
     assert(raw.toSet.contains((1L, "X", "a", "b")) &&
       raw.toSet.contains((1L, "Y", "b", "c")), raw.toSeq.toString)
-    val fine = pairs.groupBy(col("seg"), col("from_step"), col("to_step"))
+    val fine = pairs.groupBy(col("seg")(0).as("seg"), col("from_step"), col("to_step"))
       .agg(count(lit(1)).as("n"))
     val got = graft.streaming.Maintained
-      .pathsSegmentedReportFrom(spark, fine)
+      .pathsSegmentedReportFrom(spark, fine, Seq("seg"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSet
     val batch = graft.operators.Windows.pathsSegmentedOf(
-        (chunk1 ++ chunk2).map(e => (e.user_id, e.ts, e.seq, e.event_type, e.seg))
+        (chunk1 ++ chunk2).map(e => (e.user_id, e.ts, e.seq, e.event_type, e.seg.head))
           .toDF("user_id", "ts", "event_id", "event_type", "seg"))
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSet
     assert(got == batch, s"got=$got\nbatch=$batch")
+  }
+
+  test("StreamingRetentionSegmented over TWO axes pins the entry " +
+      "(seg, seg2) tuple WITH the cohort — aggregated cells through the " +
+      "2^2 read-time rollup equal the batch two-axis matrix") {
+    import spark.implicits._
+    import graft.streaming.StreamingRetentionSegmented
+    import graft.streaming.StreamingRetentionSegmented.Ev
+    implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, seg: String*) = Ev(u, t, seg)
+    val chunk1 = Seq(
+      // user 1: days 1 and 3, one pair throughout
+      ev(1, ts(1500), "A", "N1"), ev(1, ts(1440 * 3 + 10), "A", "N1"),
+      // user 2: the first event arrives in chunk 2 with an EARLIER time
+      // and another pair — cohort AND pair must re-pin
+      ev(2, ts(1440 * 2 + 5), "B", "N1"),
+      // user 6: the tuple tie — (B, A) and (A, Z) at one instant; the
+      // tuple law pins (A, Z), never the per-attribute mins (A, A)
+      ev(6, ts(1440 + 30), "B", "A"))
+    val chunk2 = Seq(
+      ev(2, ts(200), "C", "N2"),
+      ev(6, ts(1440 + 30), "A", "Z"), ev(6, ts(1440 * 2 + 1), "Q", "Q"),
+      ev(3, ts(1440 * 4 + 1), "A", "N2"))
+    val stream = MemoryStream[Ev]
+    stream.addData(chunk1)
+    stream.addData(chunk2)
+    stream.addData(Seq(ev(99, ts(100000), "", "")))
+    val q = StreamingRetentionSegmented.cells(spark, stream.toDS, "day")
+      .writeStream.format("memory").queryName("seg2ret_out")
+      .outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+
+    val cells = spark.table("seg2ret_out").filter(col("user_id") =!= 99)
+    val raw = cells.collect().map(r => (r.getLong(0), r.getSeq[String](1)))
+    assert(raw.filter(_._1 == 2L).map(_._2).distinct.toSeq == Seq(Seq("C", "N2")))
+    assert(raw.filter(_._1 == 6L).map(_._2).distinct.toSeq == Seq(Seq("A", "Z")))
+    val fine = cells.groupBy(col("seg")(0).as("seg"), col("seg")(1).as("seg2"),
+        col("cohort"), col("offset"))
+      .agg(count(lit(1)).as("users"))
+    val got = graft.streaming.Maintained
+      .retentionSegmentedReportFrom(spark, fine, Seq("seg", "seg2"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
+        r.getLong(4)))
+      .toSet
+    val batch = graft.operators.Windows.retentionSegmentedOf(
+        (chunk1 ++ chunk2).map(e => (e.user_id, e.ts, e.seg(0), e.seg(1)))
+          .toDF("user_id", "ts", "seg", "seg2"), "day",
+        by = Seq("seg" -> "segment", "seg2" -> "segment2"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getInt(3),
+        r.getLong(4)))
+      .toSet
+    assert(got == batch, s"got=$got\nbatch=$batch")
+    // all four grouping sets are present: the (A, all) and (all, Z)
+    // members sum over the other axis
+    assert(got.exists(r => r._1 == "A" && r._2 == "all"))
+    assert(got.exists(r => r._1 == "all" && r._2 == "Z"))
+  }
+
+  test("StreamingPathsSegmented over TWO axes attributes each pair to " +
+      "its FROM event's (seg, seg2) — aggregated pairs through the 2^2 " +
+      "read-time rollup equal the batch two-axis matrix") {
+    import spark.implicits._
+    import graft.streaming.StreamingPathsSegmented
+    import graft.streaming.StreamingPathsSegmented.Ev
+    implicit val sqlCtx = spark.sqlContext
+    def ev(u: Long, t: Timestamp, seq: Long, typ: String, seg: String*) =
+      Ev(u, t, seq, typ, seg)
+    val chunk1 = Seq(
+      // user 1: a → b → c with the middle event late; the pairs carry
+      // the from-events' pairs, (X, N1) then (Y, N1)
+      ev(1, ts(1), 1, "a", "X", "N1"), ev(1, ts(3), 3, "c", "X", "N2"),
+      ev(2, ts(1), 4, "a", "Z", "N1"))
+    val chunk2 = Seq(
+      ev(1, ts(2), 2, "b", "Y", "N1"),
+      // user 3: a strict (ts, seq) tie-break pair
+      ev(3, ts(5), 6, "b", "W", "N3"), ev(3, ts(5), 5, "a", "W", "N3"))
+    val stream = MemoryStream[Ev]
+    stream.addData(chunk1)
+    stream.addData(chunk2)
+    stream.addData(Seq(ev(99, ts(100000), 0, "sentinel", "", "")))
+    val q = StreamingPathsSegmented.pairs(spark, stream.toDS)
+      .writeStream.format("memory").queryName("seg2path_out")
+      .outputMode("append").start()
+    q.processAllAvailable(); q.stop()
+
+    val pairs = spark.table("seg2path_out").filter(col("user_id") =!= 99)
+    val raw = pairs.collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1), r.getString(2), r.getString(3)))
+      .toSet
+    assert(raw.contains((1L, Seq("X", "N1"), "a", "b")) &&
+      raw.contains((1L, Seq("Y", "N1"), "b", "c")), raw.toString)
+    val fine = pairs.groupBy(col("seg")(0).as("seg"), col("seg")(1).as("seg2"),
+        col("from_step"), col("to_step"))
+      .agg(count(lit(1)).as("n"))
+    val got = graft.streaming.Maintained
+      .pathsSegmentedReportFrom(spark, fine, Seq("seg", "seg2"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4)))
+      .toSet
+    val batch = graft.operators.Windows.pathsSegmentedOf(
+        (chunk1 ++ chunk2)
+          .map(e => (e.user_id, e.ts, e.seq, e.event_type, e.seg(0), e.seg(1)))
+          .toDF("user_id", "ts", "event_id", "event_type", "seg", "seg2"),
+        by = Seq("seg" -> "segment", "seg2" -> "segment2"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4)))
+      .toSet
+    assert(got == batch, s"got=$got\nbatch=$batch")
+    assert(got.contains(("all", "N1", "a", "b", 1L)) &&
+      got.contains(("all", "all", "a", "b", 2L)), got.toString)
   }
 
   test("StreamingPaths emits each adjacency exactly once; aggregated " +
